@@ -89,6 +89,13 @@ DOC_DICT: list[tuple[str, str, str, int]] = [
     ("spark", "SYS:spark", "obj", 229),
     ("spark", "SYS:spark2", "obj", 233),
 ]
+# The mention graph's pagerank/ppr pass assume_distinct=True
+# (contract_graph.py). That holds only while each entity_id has exactly
+# one (entity_type, vec_id): _doc_mentions dedups on all four columns,
+# so a second pair would add a parallel doc->entity edge.
+assert len({e for _s, e, _t, _v in DOC_DICT}) == len(
+    {(e, t, v) for _s, e, t, v in DOC_DICT}
+), "DOC_DICT: each entity_id needs exactly one (entity_type, vec_id)"
 
 _DICT_VALUES = ", ".join(
     f"('{s}', '{e}', '{t}', {v})" for s, e, t, v in DOC_DICT

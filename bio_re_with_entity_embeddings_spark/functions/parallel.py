@@ -44,14 +44,22 @@ from pyspark.sql import functions as F
 CHEAP_MAP_MIN_BYTES = 2 * 1024 * 1024
 
 
+# Catalyst's "no estimate" sizeInBytes (spark.sql.defaultSizeInBytes
+# defaults to Long.MaxValue); any estimate this large means unknown.
+_SIZE_UNKNOWN = 2**63 - 1
+
+
 def _planned_size_bytes(df: DataFrame) -> int | None:
     """Optimizer size estimate (file bytes for a parquet scan);
-    plan-time metadata only, no job runs."""
+    plan-time metadata only, no job runs. ``None`` when the estimate
+    is unknown: the sentinel size, or no ``_jdf`` plan to introspect
+    (Spark Connect DataFrames have none)."""
     try:
         # py4j converts the scala BigInt to a Python int already.
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        sz = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         return None
+    return None if sz >= _SIZE_UNKNOWN else sz
 
 
 def ensure_min_parallelism(

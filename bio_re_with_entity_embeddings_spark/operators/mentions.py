@@ -22,8 +22,11 @@ both sides) and word-boundary-delimited over ``[A-Za-z0-9_]`` so that
 Scale notes: the automaton is built ONCE PER PYTHON WORKER from the
 broadcast dictionary (lazy module-global memo keyed by broadcast id),
 not per Arrow batch; the only data shuffled out of this stage is the
-mention rows themselves. No per-row Python crosses the JVM boundary —
-this is a ``mapInPandas`` iterator stage.
+mention rows themselves. No per-row Python crosses the JVM boundary.
+Each detector has one kernel per dictionary shape, picked from the
+dictionary: ``detect_mentions`` is a ``mapInPandas`` stage (token probe
+or trie); ``detect_entity_arrays`` is a ``mapInArrow`` batch kernel for
+token-only dictionaries and a ``mapInPandas`` trie stage otherwise.
 """
 
 from __future__ import annotations
@@ -31,11 +34,8 @@ from __future__ import annotations
 from collections import deque
 from collections.abc import Iterator, Sequence
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .. import schemas
 
@@ -108,6 +108,26 @@ class AhoCorasick:
 _AUTOMATON_CACHE: dict[int, AhoCorasick] = {}
 
 
+def _automaton(pats: dict) -> AhoCorasick:
+    """This worker's automaton over the surfaces of the broadcast
+    ``pats``. The automaton keeps ``pats`` alive (``links``), so its
+    ``id`` cannot be reused by another dict while it is cached."""
+    key = id(pats)
+    auto = _AUTOMATON_CACHE.get(key)
+    if auto is None:
+        auto = AhoCorasick(pats)
+        _AUTOMATON_CACHE.clear()
+        _AUTOMATON_CACHE[key] = auto
+    return auto
+
+
+def _all_token_surfaces(patterns: dict) -> bool:
+    """True iff every surface is a single ``[A-Za-z0-9_]+`` token, so a
+    whole-token dictionary probe finds exactly the boundary-checked
+    Aho-Corasick hits."""
+    return all(s and all(ch in _WORD for ch in s) for s in patterns)
+
+
 def _patterns_from_entries(
     entries: Sequence[tuple[str, str, str]],
 ) -> dict[str, list[tuple[str, str]]]:
@@ -117,9 +137,6 @@ def _patterns_from_entries(
     for v in patterns.values():
         v.sort()
     return patterns
-
-
-_TOKEN_RE = None  # lazy per-worker compiled regex
 
 
 def detect_mentions(docs: DataFrame, dict_entries: Sequence[tuple[str, str, str]]) -> DataFrame:
@@ -145,9 +162,6 @@ def detect_mentions(docs: DataFrame, dict_entries: Sequence[tuple[str, str, str]
     """
     spark = docs.sparkSession
     patterns = _patterns_from_entries(dict_entries)
-    all_token_surfaces = all(
-        s and all(ch in _WORD for ch in s) for s in patterns
-    )
     bc = spark.sparkContext.broadcast(patterns)
 
     def run_tokens(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -187,12 +201,7 @@ def detect_mentions(docs: DataFrame, dict_entries: Sequence[tuple[str, str, str]
 
     def run_trie(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pats = bc.value
-        key = id(pats)
-        auto = _AUTOMATON_CACHE.get(key)
-        if auto is None:
-            auto = AhoCorasick(pats)
-            _AUTOMATON_CACHE.clear()
-            _AUTOMATON_CACHE[key] = auto
+        auto = _automaton(pats)
         cols = ["doc_id", "entity_id", "entity_type", "mention", "begin", "end"]
         for pdf in batches:
             out: list[tuple] = []
@@ -212,111 +221,8 @@ def detect_mentions(docs: DataFrame, dict_entries: Sequence[tuple[str, str, str]
                         out.append((doc_id, entity_id, entity_type, mention, begin, end))
             yield pd.DataFrame(out, columns=cols)
 
-    runner = run_tokens if all_token_surfaces else run_trie
+    runner = run_tokens if _all_token_surfaces(patterns) else run_trie
     return docs.select("doc_id", "content").mapInPandas(runner, schemas.MENTIONS)
-
-
-def detect_entity_sets(
-    docs: DataFrame,
-    dict_entries: Sequence[tuple[str, str, str]],
-    entity_idx: dict[str, int],
-    type_codes: dict[str, int] | None = None,
-) -> DataFrame:
-    """Scale-path detector: per-doc DISTINCT dictionary-encoded entity
-    rows (doc_id, entity_idx int, entity_type) straight from the Arrow
-    stage. The per-doc set dedupe happens in the Python worker (a set
-    insert per hit), so the 5M+-row (doc, entity) distinct exchange the
-    generic path needs simply never exists. Spans/mention text are not
-    emitted — use ``detect_mentions`` for the annotation table.
-
-    ``entity_idx``: entity_id -> stable int index (see pipeline's
-    idx_dim); types are carried as strings (tiny dictionary column).
-
-    Matcher choice mirrors ``detect_mentions`` exactly: the C-speed
-    token-probe path ONLY when every surface is a single
-    ``[A-Za-z0-9_]+`` token (the probe can never see a multi-token or
-    punctuated surface); otherwise the boundary-checked Aho-Corasick
-    automaton with the same per-doc set dedup.
-    """
-    spark = docs.sparkSession
-    patterns = _patterns_from_entries(dict_entries)
-    if type_codes is None:
-        type_codes = {
-            t: i for i, t in enumerate(sorted({e[2] for e in dict_entries}))
-        }
-    all_token_surfaces = all(
-        s and all(ch in _WORD for ch in s) for s in patterns
-    )
-    # surface -> list[(idx, type_code)] — ints only past this point,
-    # so the join/agg keys downstream are fixed-width.
-    compact = {
-        s: [(entity_idx[eid], type_codes[et]) for eid, et in links]
-        for s, links in patterns.items()
-    }
-    bc = spark.sparkContext.broadcast(compact)
-
-    def run_tokens(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re
-
-        pats = bc.value
-        token_re = re.compile(r"[a-z0-9_]+")  # over lowered content
-        findall = token_re.findall
-        get = pats.get
-        # round 6: C-level key-set intersection instead of a Python
-        # loop over every token (see detect_entity_arrays)
-        keyset = frozenset(pats)
-        intersect = keyset.intersection
-        cols = ["doc_id", "entity_idx", "type_code"]
-        for pdf in batches:
-            out: list[tuple] = []
-            for doc_id, content in zip(pdf["doc_id"].values, pdf["content"].values):
-                if not content:
-                    continue
-                seen: set = set()
-                update = seen.update
-                low = content.lower()
-                if len(low) == len(content):
-                    for tok in intersect(findall(low)):
-                        update(get(tok))
-                else:
-                    # rare length-changing lower(): apply the span
-                    # predicate so the entity set matches exactly the
-                    # entities detect_mentions would keep.
-                    for m in token_re.finditer(low):
-                        links = get(m.group())
-                        if links and content[m.start():m.end()].lower() == m.group():
-                            update(links)
-                out.extend((doc_id, i, t) for i, t in seen)
-            yield pd.DataFrame(out, columns=cols)
-
-    def run_trie(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pats = bc.value
-        key = ("sets", id(pats))
-        auto = _AUTOMATON_CACHE.get(key)
-        if auto is None:
-            auto = AhoCorasick({s: [] for s in pats})
-            _AUTOMATON_CACHE.clear()
-            _AUTOMATON_CACHE[key] = auto
-        cols = ["doc_id", "entity_idx", "type_code"]
-        for pdf in batches:
-            out: list[tuple] = []
-            for doc_id, content in zip(pdf["doc_id"].values, pdf["content"].values):
-                if not content:
-                    continue
-                seen: set = set()
-                low = content.lower()
-                safe = len(low) == len(content)
-                for b, e, surface in auto.find(content, low):
-                    if not safe and content[b:e].lower() != surface:
-                        continue
-                    seen.update(pats[surface])
-                out.extend((doc_id, i, t) for i, t in seen)
-            yield pd.DataFrame(out, columns=cols)
-
-    runner = run_tokens if all_token_surfaces else run_trie
-    return docs.select("doc_id", "content").mapInPandas(
-        runner, "doc_id string, entity_idx int, type_code int"
-    )
 
 
 def detect_entity_arrays(
@@ -337,17 +243,17 @@ def detect_entity_arrays(
 
     ``max_entities_per_doc`` > 0 truncates each doc's (sorted) set —
     the hub-doc bound: one row explodes to at most cap^2 pairs.
-    Matcher choice mirrors ``detect_mentions`` (token probe only for
-    single-word-token surfaces, Aho-Corasick otherwise)."""
+
+    Kernel choice follows the dictionary, as in ``detect_mentions``: a
+    ``mapInArrow`` batch token probe when every surface is a single
+    word token, else a ``mapInPandas`` Aho-Corasick stage (the only
+    kernel that matches multi-token or punctuated surfaces)."""
     spark = docs.sparkSession
     patterns = _patterns_from_entries(dict_entries)
     if type_codes is None:
         type_codes = {
             t: i for i, t in enumerate(sorted({e[2] for e in dict_entries}))
         }
-    all_token_surfaces = all(
-        s and all(ch in _WORD for ch in s) for s in patterns
-    )
     compact = {
         s: [entity_idx[eid] * 256 + type_codes[et] for eid, et in links]
         for s, links in patterns.items()
@@ -403,6 +309,7 @@ def detect_entity_arrays(
         )
         token_re = re.compile(r"[a-z0-9_]+")
         get = pats.get
+        intersect = frozenset(pats).intersection
         clean_lut = np.zeros(256, dtype=bool)
         for ch in "abcdefghijklmnopqrstuvwxyz0123456789_ ":
             clean_lut[ord(ch)] = True
@@ -412,9 +319,7 @@ def detect_entity_arrays(
             low = content.lower()
             if len(low) == len(content):
                 seen: set = set()
-                for tok in frozenset(pats).intersection(
-                    token_re.findall(low)
-                ):
+                for tok in intersect(token_re.findall(low)):
                     seen.update(get(tok))
                 if seen:
                     out.append(emit(doc_id, seen))
@@ -571,12 +476,7 @@ def detect_entity_arrays(
 
     def run_trie(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pats = bc.value
-        key = ("arr", id(pats))
-        auto = _AUTOMATON_CACHE.get(key)
-        if auto is None:
-            auto = AhoCorasick({s: [] for s in pats})
-            _AUTOMATON_CACHE.clear()
-            _AUTOMATON_CACHE[key] = auto
+        auto = _automaton(pats)
         for pdf in batches:
             out: list[tuple] = []
             for doc_id, content in zip(pdf["doc_id"].values, pdf["content"].values):
@@ -594,98 +494,6 @@ def detect_entity_arrays(
             yield pd.DataFrame(out, columns=["doc_id", "ets"])
 
     src = docs.select("doc_id", "content")
-    if all_token_surfaces and os.environ.get(
-        "SPARK_GRAFT_DETECTOR", "arrow"
-    ) == "jvm":
-        # Alternate pure-JVM boundary (guide §4.1 — built-ins over any
-        # Python path), kept behind SPARK_GRAFT_DETECTOR=jvm: for
-        # ASCII docs the whole kernel is expressible in codegen'd JVM
-        # expressions — translate+split tokenization, explode the
-        # per-doc distinct tokens, broadcast-hash-join the
-        # (token -> codes) dictionary, one collect/flatten/distinct/
-        # sort aggregate per doc.  It removes the JVM->Python Arrow
-        # stream entirely (measured: box-wide SYSTEM-time storms from
-        # the PythonRunner socket write path vanish, 0 storm samples),
-        # but costs ~16x the Arrow kernel's CPU on the probe/aggregate
-        # side — 500k-file pipeline 55-98 s vs the Arrow path's
-        # 16-60 s — so the Arrow kernel stays the default.  Non-ASCII
-        # docs (where JVM lower() and Python str.lower() can diverge)
-        # keep the exact Arrow-kernel path in either mode.
-        rows = [
-            (tok, [int(v) for v in vals])
-            for tok, vals in sorted(compact.items())
-        ]
-        dict_df = spark.createDataFrame(rows, "token string, codes array<int>")
-        is_ascii = F.col("content").isNull() | (
-            F.octet_length("content") == F.length("content")
-        )
-        # Tokenizer: translate() every non-word ASCII char to a space
-        # (a linear per-char map), then split on the literal single
-        # space — measured 80x faster than split on the
-        # "[^a-z0-9_]+" regex (String.split's per-token Matcher
-        # substring churn: 69 s vs 0.9 s for the 50k-doc corpus) and
-        # token-identical for ASCII docs (runs of non-word chars
-        # become runs of spaces; the empties they split into are
-        # dropped below).  The token array is materialized in its OWN
-        # projection before the explode: Generate performs no
-        # common-subexpression elimination, so an expression inside
-        # explode() is re-run once per EMITTED row (the count-min md5
-        # lesson from earlier this round).
-        nonword = "".join(
-            chr(c)
-            for c in range(128)
-            if chr(c) not in "abcdefghijklmnopqrstuvwxyz0123456789_ "
-        )
-        hits = (
-            src.where(is_ascii)
-            .select(
-                "doc_id",
-                F.array_distinct(
-                    F.split(
-                        F.translate(
-                            F.lower(F.col("content")),
-                            nonword,
-                            " " * len(nonword),
-                        ),
-                        " ",
-                        -1,
-                    )
-                ).alias("toks"),
-            )
-            .select("doc_id", F.explode("toks").alias("t"))
-            .where(F.col("t") != "")
-            .join(F.broadcast(dict_df), F.col("t") == F.col("token"))
-            .select("doc_id", "codes")
-        )
-        jvm_out = hits.groupBy("doc_id").agg(
-            F.sort_array(
-                F.array_distinct(F.flatten(F.collect_list("codes")))
-            ).alias("ets")
-        )
-        if cap > 0:
-            jvm_out = jvm_out.withColumn("ets", F.slice("ets", 1, cap))
-        py_out = src.where(~is_ascii).mapInArrow(
-            run_tokens_arrow, "doc_id string, ets array<int>"
-        )
-        return jvm_out.unionByName(py_out)
+    if _all_token_surfaces(patterns):
+        return src.mapInArrow(run_tokens_arrow, "doc_id string, ets array<int>")
     return src.mapInPandas(run_trie, "doc_id string, ets array<int>")
-
-
-def detect_mentions_native(docs: DataFrame, dict_df: DataFrame) -> DataFrame:
-    """Pure-DataFrame mention finder (no spans): broadcast the dictionary,
-    word-boundary ``contains`` via padded LIKE. Oracle-checkable in ANSI
-    SQL; used for DuckDB cross-validation of the trie stage at doc/entity
-    granularity (the trie stage is the scale path — one scan instead of
-    |dict| LIKE probes).
-    """
-    padded = F.concat(F.lit(" "), F.lower(F.col("content")), F.lit(" "))
-    return (
-        docs.crossJoin(F.broadcast(dict_df))
-        .where(
-            F.contains(
-                padded, F.concat(F.lit(" "), F.lower(F.col("surface")), F.lit(" "))
-            )
-        )
-        .select("doc_id", "entity_id", "entity_type", F.col("surface").alias("mention"))
-        .distinct()
-    )

@@ -64,6 +64,39 @@ def test_pipeline_mention_stage_cached(spark):
     assert "MapInPandas" not in plan and "MapInArrow" not in plan, plan[:800]
 
 
+def test_entity_arrays_kernel_follows_dictionary_shape(spark):
+    """The scale-path detector plans the Arrow batch kernel for a
+    token-only dictionary and the pandas trie only when a surface spans
+    several tokens. Both kernels give identical output, so only the
+    plan can show a silent fall-back to the slower one."""
+    from bio_re_with_entity_embeddings_spark.operators import mentions as M
+
+    docs = spark.createDataFrame(
+        [("d0", "read frame here")], "doc_id string, content string"
+    )
+    token = [("read", "FN:1", "fn"), ("frame", "FN:2", "fn")]
+    multi = token + [("read frame", "FN:3", "fn")]
+    idx = {"FN:1": 1, "FN:2": 2, "FN:3": 3}
+
+    plan = plan_of(M.detect_entity_arrays(docs, token, idx))
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+    plan = plan_of(M.detect_entity_arrays(docs, multi, idx))
+    assert "MapInPandas" in plan and "MapInArrow" not in plan, plan
+
+
+def test_planned_size_sentinel_is_unknown(spark):
+    """A plan with no size estimate (a Python-local DataFrame) reports
+    Long.MaxValue; the bytes gate must read that as unknown, not as a
+    huge input."""
+    from bio_re_with_entity_embeddings_spark.functions.parallel import (
+        _planned_size_bytes,
+    )
+
+    assert _planned_size_bytes(spark.range(10)) == 80
+    local = spark.createDataFrame([(1, "a")], "x int, y string")
+    assert _planned_size_bytes(local) is None
+
+
 def test_whole_stage_codegen_in_aggregates(spark):
     df = entrymod.queries()["rel_agg_groupby"](spark, SF_DIR)
     df.collect()  # AQE: the FINAL plan exists only on the executed QueryExecution

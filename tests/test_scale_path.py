@@ -56,7 +56,7 @@ def test_scale_articles_empty_parity_full(both):
 def test_scale_path_multi_token_surfaces(spark):
     """Multi-token / punctuated dictionary surfaces (the norm in the
     reference's PubTator/MeSH surface universe) must match on the scale
-    path too — detect_entity_sets falls back to the boundary-checked
+    path too — detect_entity_arrays falls back to the boundary-checked
     Aho-Corasick matcher, identically to the parity path."""
     dictionary = [
         fixtures.DictEntry("read frame", "FN:9001", fixtures.FN),

@@ -5,7 +5,7 @@ points (``'i' + U+0307``), so every lowered-coordinate span after it is
 shifted by one against the original content. The reference span
 predicate (``data/pubtator.py:74-84``; golden.py restates it) DROPS such
 hits; all four detector paths (token-probe / Aho-Corasick x mentions /
-entity-sets) must agree with golden on that, not silently emit shifted
+entity arrays) must agree with golden on that, not silently emit shifted
 mentions.
 """
 
@@ -77,9 +77,10 @@ def test_trie_path_drops_shifted_spans(spark):
 
 
 def test_entity_sets_match_kept_mentions(spark):
-    """Both detect_entity_sets paths must include an entity iff at least
-    one VALID (non-shifted) mention of it exists — parity with
-    detect_mentions under the span predicate."""
+    """Both detect_entity_arrays kernels (token-only and multi-token
+    dictionary) must include an entity iff at least one VALID
+    (non-shifted) mention of it exists — parity with detect_mentions
+    under the span predicate."""
     docs = _docs_df(spark)
     for dictionary in (TOKEN_DICT, TRIE_DICT):
         entries = [(e.surface, e.entity_id, e.entity_type) for e in dictionary]
@@ -89,16 +90,13 @@ def test_entity_sets_match_kept_mentions(spark):
             (doc, idx[eid])
             for doc, eid in zip(exp_m["doc_id"], exp_m["entity_id"])
         }
-        got_sets = M.detect_entity_sets(docs, entries, idx).toPandas()
-        got = set(zip(got_sets["doc_id"], got_sets["entity_idx"]))
-        assert got == exp
         got_arr = M.detect_entity_arrays(docs, entries, idx).toPandas()
-        got2 = {
+        got = {
             (doc, v // 256)
             for doc, ets in zip(got_arr["doc_id"], got_arr["ets"])
             for v in ets
         }
-        assert got2 == exp
+        assert got == exp
 
 
 def test_shifted_span_only_doc_yields_no_entity(spark):
@@ -112,5 +110,4 @@ def test_shifted_span_only_doc_yields_no_entity(spark):
     entries = [("alpha", "E:1", "t")]
     assert golden.expected_mentions(rows, TOKEN_DICT).empty
     assert M.detect_mentions(docs, entries).count() == 0
-    assert M.detect_entity_sets(docs, entries, {"E:1": 0}).count() == 0
     assert M.detect_entity_arrays(docs, entries, {"E:1": 0}).count() == 0
