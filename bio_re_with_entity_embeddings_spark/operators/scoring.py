@@ -101,6 +101,11 @@ def score_pairs(
         bi = idx.reindex(b.to_numpy(dtype=np.int64)).fillna(0).to_numpy(dtype=np.int64)
         return pd.Series(score_vectors(m, ai, bi))
 
+    # The kernel is pure; nondeterministic only tells the optimizer not
+    # to push the threshold filter below this projection, which inlines
+    # the UDF into the filter and scores every pair twice.
+    cosine = cosine.asNondeterministic()
+
     vecs = entities.select("entity_id", "vec_id")
     subj_vec = vecs.withColumnsRenamed({"entity_id": "subj", "vec_id": "subj_vec"})
     obj_vec = vecs.withColumnsRenamed({"entity_id": "obj", "vec_id": "obj_vec"})

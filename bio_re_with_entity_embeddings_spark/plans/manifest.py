@@ -14,9 +14,12 @@ iff it has no manifest row OR its input changed — the manifest stores
 each bucket's input row count and input sha-xor fold, and resume
 compares them against the current input, so a grown/edited corpus
 recomputes exactly the touched buckets (per-bucket dynamic partition
-overwrite keeps that idempotent). Double-written manifest rows are
-deduped on read by (stage, partition_id) keeping the LATEST (ts,
-run_id) row — the data directory always reflects the last writer.
+overwrite keeps that idempotent). Both sides hold at most n_buckets
+rows, so the driver compares them: an unchanged stage returns its
+checkpoint without running, a changed one runs on its stale buckets'
+rows only. Double-written manifest rows are deduped on read by (stage,
+partition_id) keeping the LATEST (ts, run_id) row — the data directory
+always reflects the last writer.
 
 Lineage: ``content_sha_xor`` is an order-insensitive XOR-fold of the
 rows' ``content_sha`` (first 15 hex chars as int64) — equality between
@@ -30,8 +33,22 @@ import os
 import time
 import uuid
 
+import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+_MANIFEST_SCHEMA = T.StructType([
+    T.StructField(name, dtype) for name, dtype in (
+        ("stage", T.StringType()), ("partition_id", T.IntegerType()),
+        ("rows_in", T.LongType()), ("rows_out", T.LongType()),
+        ("content_sha_xor", T.StringType()), ("in_sha_xor", T.StringType()),
+        ("run_wall_ms", T.LongType()), ("run_id", T.StringType()),
+        ("ts", T.LongType()),
+    )
+])
+_ZERO = "%016x" % 0
 
 
 def with_bucket(df: DataFrame, key_col: str = "repo", n_buckets: int = 32) -> DataFrame:
@@ -54,13 +71,20 @@ def _data_path(base: str, stage: str) -> str:
 
 
 def read_manifest(spark: SparkSession, base: str, stage: str) -> DataFrame | None:
+    """The stage's manifest, one row per bucket, or ``None`` when the
+    ``_manifest`` directory is missing or holds no part file yet. Any
+    other read failure (an unreadable part file) raises: treating it as
+    "no manifest" would recompute the stage on every run and keep
+    appending to the broken directory."""
     path = _manifest_path(base, stage)
     try:
         # mergeSchema: a dir holding pre-rename (wall_ms) and current
         # (run_wall_ms) rows must not resolve file-order dependently.
         m = spark.read.option("mergeSchema", "true").parquet(path)
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
     # Migration: manifests written before the wall_ms -> run_wall_ms
     # rename stay resumable (ADVICE r3) — resolve whichever exists.
     cols = set(m.columns)
@@ -96,6 +120,20 @@ def read_manifest(spark: SparkSession, base: str, stage: str) -> DataFrame | Non
     )
 
 
+def _bucket_stats(df: DataFrame, sha_col: str) -> dict[int, tuple[int, str]]:
+    """bucket -> (row count, hex sha fold): one map-combined aggregate,
+    collected (at most n_buckets rows). The fold is formatted in Spark,
+    ``%016x`` of the fold coalesced to 0, exactly as manifests store it
+    — so stored and current stats compare as strings, and a bucket
+    whose shas are all null matches its manifest row."""
+    fold = sha_xor(df, sha_col) if sha_col in df.columns else F.lit(0).cast("long")
+    rows = df.groupBy("bucket").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.format_string("%016x", F.coalesce(fold, F.lit(0).cast("long"))).alias("fold"),
+    ).collect()
+    return {r["bucket"]: (r["n"], r["fold"]) for r in rows}
+
+
 def run_stage(
     spark: SparkSession,
     base: str,
@@ -105,135 +143,78 @@ def run_stage(
     run_id: str | None = None,
     sha_col: str = "content_sha",
 ) -> DataFrame:
-    """Execute ``fn(input_subset) -> DataFrame`` per stale bucket set,
-    materialize + manifest, and return the full stage output.
+    """Execute ``fn(input_subset) -> DataFrame`` on the stale buckets,
+    materialize + manifest them, and return the full stage output.
 
     ``bucketed_input`` must carry an int ``bucket`` column (use
     ``with_bucket``); ``fn``'s output must preserve it. A bucket is
-    DONE (skipped, its input anti-joined away before ``fn`` runs) iff
-    it has a manifest row AND that row's recorded input stats — row
-    count + content-sha xor fold — equal the current input's. Buckets
-    whose input grew or changed are recomputed and idempotently
-    overwritten; the one extra cost of change detection is a map-side-
-    combinable count+xor aggregate over the full input per rerun."""
+    DONE iff it has a manifest row AND that row's recorded input stats
+    — row count + content-sha xor fold — equal the current input's.
+    The driver decides this from one map-combined count+xor aggregate
+    over the input and the collected manifest, each at most n_buckets
+    rows. An unchanged stage (every bucket done, none orphaned) costs
+    just that: it returns its checkpoint without calling ``fn`` or
+    writing anything. Otherwise ``fn`` sees only the stale buckets'
+    rows, which are idempotently overwritten."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    manifest = read_manifest(spark, base, stage)
-
     t0 = time.perf_counter()
-    cur_stats = bucketed_input.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("rows_in"),
-        (
-            sha_xor(bucketed_input, sha_col)
-            if sha_col in bucketed_input.columns
-            else F.lit(0).cast("long")
-        ).alias("in_sha_xor"),
+    manifest = read_manifest(spark, base, stage)
+    prev = {} if manifest is None else {r["partition_id"]: r for r in manifest.collect()}
+    cur = _bucket_stats(bucketed_input, sha_col)
+    stale = sorted(
+        b for b, s in cur.items()
+        if b not in prev or (prev[b]["rows_in"], prev[b]["in_sha_xor"]) != s
     )
-    orphaned: list[int] = []
-    if manifest is not None:
-        done = (
-            manifest.select(
-                F.col("partition_id").alias("bucket"),
-                F.col("rows_in").alias("m_rows_in"),
-                F.col("in_sha_xor").alias("m_in_sha_xor"),
-            )
-            .join(cur_stats, "bucket", "inner")
-            .where(
-                (F.col("m_rows_in") == F.col("rows_in"))
-                & F.col("m_in_sha_xor").eqNullSafe(
-                    F.format_string("%016x", F.col("in_sha_xor"))
-                )
-            )
-            .select("bucket")
-        )
-        todo = bucketed_input.join(F.broadcast(done), "bucket", "left_anti")
-        n_in_by_bucket = cur_stats.join(F.broadcast(done), "bucket", "left_anti")
-        # ORPHANS: manifested buckets whose input vanished ENTIRELY.
-        # They have no cur_stats row, so they are neither done nor
-        # todo, and dynamic overwrite never touches their directories —
-        # deleted docs would silently persist in stage output. Delete
-        # the directories now and tombstone the manifest (rows 0).
-        # Bucket count is bounded (n_buckets), so the collect is tiny.
-        orphaned = [
-            r["bucket"]
-            for r in manifest.select(F.col("partition_id").alias("bucket"))
-            .join(cur_stats.select("bucket"), "bucket", "left_anti")
-            .join(  # only tombstone buckets not ALREADY tombstoned
-                manifest.where(
-                    (F.col("rows_in") == 0) & (F.col("rows_out") == 0)
-                ).select(F.col("partition_id").alias("bucket")),
-                "bucket",
-                "left_anti",
-            )
-            .collect()
-        ]
-        if orphaned:
-            jvm = spark._jvm
-            hconf = spark._jsc.hadoopConfiguration()
-            for b in orphaned:
-                p = jvm.org.apache.hadoop.fs.Path(
-                    os.path.join(_data_path(base, stage), f"bucket={b}")
-                )
-                p.getFileSystem(hconf).delete(p, True)
-    else:
-        todo = bucketed_input
-        n_in_by_bucket = cur_stats
+    # ORPHANS: manifested buckets whose input vanished ENTIRELY (and
+    # not tombstoned yet, rows 0/0). Dynamic overwrite never touches
+    # their directories, so deleted docs would silently persist in
+    # stage output: delete them and tombstone the manifest.
+    orphaned = sorted(
+        b for b, r in prev.items()
+        if b not in cur and (r["rows_in"], r["rows_out"]) != (0, 0)
+    )
+    data = _data_path(base, stage)
+    if manifest is not None and not stale and not orphaned:
+        return spark.read.parquet(data)
 
+    # Stale directories go too: dynamic overwrite replaces only the
+    # buckets fn emits rows for, so a stale bucket whose new output is
+    # empty would keep its old rows.
+    jvm = spark._jvm
+    hconf = spark._jsc.hadoopConfiguration()
+    for b in orphaned + stale:
+        p = jvm.org.apache.hadoop.fs.Path(os.path.join(data, f"bucket={b}"))
+        p.getFileSystem(hconf).delete(p, True)
+
+    # A literal bucket filter prunes partitions of a checkpointed input;
+    # bucket is never null (pmod of a hash), so no row is lost.
+    todo = (
+        bucketed_input if manifest is None
+        else bucketed_input.where(F.col("bucket").isin(stale))
+    )
     out = fn(todo)
     assert "bucket" in out.columns, f"stage {stage}: fn must preserve 'bucket'"
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    out.write.mode("overwrite").partitionBy("bucket").parquet(_data_path(base, stage))
+    out.write.mode("overwrite").partitionBy("bucket").parquet(data)
     # Whole-RUN wall for this stage invocation, stamped identically
     # onto every bucket it wrote — honest name: this is NOT a
     # per-bucket task time (capturing that needs a Spark listener).
     run_wall_ms = int((time.perf_counter() - t0) * 1000)
 
-    written = spark.read.parquet(_data_path(base, stage))
-    new_out = (
-        written.join(
-            F.broadcast(n_in_by_bucket.select("bucket")), "bucket", "left_semi"
-        )
-        if manifest is not None
-        else written
-    )
-    stats = new_out.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("rows_out"),
-        (
-            sha_xor(new_out, sha_col)
-            if sha_col in new_out.columns
-            else F.lit(0).cast("long")
-        ).alias("out_sha_xor"),
-    )
-    mrows = (
-        n_in_by_bucket.join(stats, "bucket", "full")
-        .select(
-            F.lit(stage).alias("stage"),
-            F.col("bucket").cast("int").alias("partition_id"),
-            F.coalesce("rows_in", F.lit(0)).cast("long").alias("rows_in"),
-            F.coalesce("rows_out", F.lit(0)).cast("long").alias("rows_out"),
-            F.format_string(
-                "%016x", F.coalesce("out_sha_xor", F.lit(0))
-            ).alias("content_sha_xor"),
-            F.format_string(
-                "%016x", F.coalesce("in_sha_xor", F.lit(0))
-            ).alias("in_sha_xor"),
-            F.lit(run_wall_ms).cast("long").alias("run_wall_ms"),
-            F.lit(run_id).alias("run_id"),
-            F.lit(time.time_ns()).cast("long").alias("ts"),
-        )
-    )
-    if orphaned:
-        zero = "%016x" % 0
-        tomb = spark.createDataFrame(
-            [
-                (stage, int(b), 0, 0, zero, zero, run_wall_ms, run_id, time.time_ns())
-                for b in orphaned
-            ],
-            mrows.schema,
-        )
-        mrows = mrows.unionByName(tomb)
-    mrows.write.mode("append").parquet(_manifest_path(base, stage))
-    return spark.read.parquet(_data_path(base, stage))
+    written = spark.read.parquet(data)
+    got = _bucket_stats(written.where(F.col("bucket").isin(stale)), sha_col)
+    ts = time.time_ns()
+    rows = [
+        (stage, b, cur[b][0], *got.get(b, (0, _ZERO)), cur[b][1], run_wall_ms, run_id, ts)
+        for b in stale
+    ] + [(stage, b, 0, 0, _ZERO, _ZERO, run_wall_ms, run_id, ts) for b in orphaned]
+    # From pandas, the rows reach the JVM as Arrow batches: no Python
+    # worker job, one part file per append.
+    spark.createDataFrame(
+        pd.DataFrame(rows, columns=_MANIFEST_SCHEMA.names), _MANIFEST_SCHEMA
+    ).coalesce(1).write.mode("append").parquet(_manifest_path(base, stage))
+    return written
 
 
 def lineage_check(
@@ -246,27 +227,20 @@ def lineage_check(
     manifest = read_manifest(spark, base, stage)
     if manifest is None:
         return False
-    inp = bucketed_input.groupBy("bucket").agg(
-        F.format_string("%016x", sha_xor(bucketed_input, sha_col)).alias("in_fold")
+    prev = {r["partition_id"]: r for r in manifest.collect()}
+    cur = _bucket_stats(bucketed_input, sha_col)
+    # A bucket present on only ONE side (input never manifested, or
+    # manifest row with no input) is a lineage failure. Exception: a
+    # TOMBSTONE (orphaned bucket whose input vanished) is consistent,
+    # not a failure — identified by its explicit marker (rows_in == 0
+    # AND rows_out == 0, how run_stage writes tombstones), NOT by a
+    # zero sha fold: a live bucket can legitimately fold to zero
+    # (paired duplicate shas, or a stage without sha_col), and its
+    # vanished input must still FAIL the check (ADVICE r3).
+    return all(
+        b in prev and (
+            prev[b]["content_sha_xor"] == cur[b][1] if b in cur
+            else (prev[b]["rows_in"], prev[b]["rows_out"]) == (0, 0)
+        )
+        for b in prev.keys() | cur.keys()
     )
-    joined = manifest.join(
-        inp, manifest.partition_id == inp.bucket, "full"
-    ).select("partition_id", "rows_in", "rows_out", "content_sha_xor", "in_fold")
-    # Null-safe: a bucket present on only ONE side (input never
-    # manifested, or manifest row with no input) is a lineage failure,
-    # not a silently-dropped null comparison. Exception: a TOMBSTONE
-    # (orphaned bucket whose input vanished) is consistent, not a
-    # failure — identified by its explicit marker (rows_in == 0 AND
-    # rows_out == 0, how run_stage writes tombstones), NOT by a zero
-    # sha fold: a live bucket can legitimately fold to zero (paired
-    # duplicate shas, or a stage without sha_col), and its vanished
-    # input must still FAIL the check (ADVICE r3).
-    tombstone_ok = (
-        (F.col("rows_in") == 0)
-        & (F.col("rows_out") == 0)
-        & F.col("in_fold").isNull()
-    )
-    bad = joined.where(
-        ~(F.col("content_sha_xor").eqNullSafe(F.col("in_fold")) | tombstone_ok)
-    ).count()
-    return bad == 0

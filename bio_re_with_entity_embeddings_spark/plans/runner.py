@@ -5,8 +5,9 @@ Wraps the stage functions of ``plans/pipeline.py`` with
 ``plans/manifest.py``: every stage writes bucket-partitioned parquet +
 a manifest row per bucket (rows in/out, content-sha xor fold, wall,
 run id). A rerun — after a crash, a kill, or on a grown corpus —
-anti-joins the manifest and recomputes ONLY missing buckets; completed
-buckets are never touched (idempotent per-bucket dynamic overwrite).
+recomputes ONLY missing or changed buckets; completed buckets are never
+touched (idempotent per-bucket dynamic overwrite), and a stage with no
+stale bucket returns its checkpoint after one input fingerprint.
 
 The bucket key is ``pmod(xxhash64(repo), n_buckets)`` — the explicit
 repo-hash partitioning of the north rule: all files of a repo land in

@@ -4,6 +4,7 @@ byte-identical output; lineage xor-fold matches input."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -180,12 +181,74 @@ def test_lineage_zero_fold_bucket_is_not_a_tombstone(spark, workdir):
 def test_rerun_is_idempotent(spark, workdir):
     docs = M.with_bucket(_corpus(spark), "repo", 8)
     M.run_stage(spark, workdir, "st", docs, lambda df: df, run_id="r1")
-    out2 = M.run_stage(spark, workdir, "st", docs, lambda df: df, run_id="r2")
+    listing = sorted(os.listdir(M._manifest_path(workdir, "st")))
+
+    def fn(df):
+        raise AssertionError("an unchanged rerun must not call the stage fn")
+
+    out2 = M.run_stage(spark, workdir, "st", docs, fn, run_id="r2")
     assert out2.count() == 200
     m = M.read_manifest(spark, workdir, "st").toPandas()
     # all buckets still attributed to r1; no double counting
     assert (m["run_id"] == "r1").all()
     assert m["rows_out"].sum() == 200
+    # nothing appended: an unchanged rerun writes no manifest file
+    assert sorted(os.listdir(M._manifest_path(workdir, "st"))) == listing
+
+
+def test_null_sha_bucket_resumes(spark, workdir):
+    """A bucket whose content_sha values are all null folds to null;
+    the manifest stores it as zero, and the rerun must compare the same
+    form, not recompute that bucket on every unchanged rerun."""
+    docs = spark.createDataFrame(
+        [("a", None, 0), ("b", None, 0), ("c", "cccccccccccccccccccc", 1)],
+        "doc_id string, content_sha string, bucket int",
+    ).cache()
+    M.run_stage(spark, workdir, "st", docs, lambda df: df, run_id="r1")
+    M.run_stage(spark, workdir, "st", docs, lambda df: df, run_id="r2")
+    m = M.read_manifest(spark, workdir, "st").toPandas()
+    assert (m["run_id"] == "r1").all(), m
+
+
+def test_corrupt_manifest_raises(spark, workdir):
+    """Only a missing or part-file-less _manifest means "no manifest";
+    an unreadable part file must fail loudly, not send every later run
+    into a full recompute that appends to the broken directory."""
+    assert M.read_manifest(spark, workdir, "st") is None
+    os.makedirs(M._manifest_path(workdir, "st"))
+    open(os.path.join(M._manifest_path(workdir, "st"), "_SUCCESS"), "w").close()
+    assert M.read_manifest(spark, workdir, "st") is None
+
+    docs = M.with_bucket(_corpus(spark), "repo", 8)
+    M.run_stage(spark, workdir, "st", docs, lambda df: df, run_id="r1")
+    bad = os.path.join(M._manifest_path(workdir, "st"), "part-99999-garbage.parquet")
+    with open(bad, "w") as fh:
+        fh.write("not parquet")
+    with pytest.raises(Exception, match="part-99999-garbage"):
+        M.read_manifest(spark, workdir, "st")
+    with pytest.raises(Exception, match="part-99999-garbage"):
+        M.run_stage(spark, workdir, "st", docs, lambda df: df, run_id="r2")
+
+
+def test_stale_bucket_with_empty_output_is_cleared(spark, workdir):
+    """A bucket whose changed input yields no output rows must lose its
+    old rows: dynamic overwrite only replaces buckets the stage emits
+    rows for."""
+    schema = "doc_id string, content_sha string, bucket int, keep boolean"
+    first = spark.createDataFrame(
+        [("a", "aaaaaaaaaaaaaaaaaaaa", 0, True), ("b", "bbbbbbbbbbbbbbbbbbbb", 1, True)],
+        schema,
+    )
+    edited = spark.createDataFrame(
+        [("a", "dddddddddddddddddddd", 0, False), ("b", "bbbbbbbbbbbbbbbbbbbb", 1, True)],
+        schema,
+    )
+    M.run_stage(spark, workdir, "st", first, lambda df: df.where("keep"), run_id="r1")
+    out = M.run_stage(spark, workdir, "st", edited, lambda df: df.where("keep"), run_id="r2")
+    assert sorted(r.doc_id for r in out.collect()) == ["b"]
+    m = M.read_manifest(spark, workdir, "st").toPandas().set_index("partition_id")
+    assert m.loc[0, "run_id"] == "r2" and m.loc[0, "rows_out"] == 0
+    assert m.loc[1, "run_id"] == "r1"
 
 
 def test_shrunk_corpus_deletes_orphaned_buckets(spark, workdir):

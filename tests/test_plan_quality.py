@@ -175,6 +175,27 @@ def test_scale_path_pair_stage_shapes(spark):
         assert "^" in l or "xor" in l.lower(), l  # guard as condition only
 
 
+def test_cosine_udf_runs_once_per_scored_frame(spark):
+    """Each scored pair runs the cosine kernel once: the threshold
+    filter stays above the scoring projection instead of inlining a
+    second copy of the UDF. The scale path scores all relations in one
+    frame (1 ArrowEvalPython); the parity path scores each of the 3
+    relations on its own (3)."""
+    from bio_re_with_entity_embeddings_spark import fixtures
+    from bio_re_with_entity_embeddings_spark.deploy import ensure_shipped
+    from bio_re_with_entity_embeddings_spark.plans import pipeline
+
+    ensure_shipped(spark)
+    d = fixtures.make_dictionary()
+    corpus = fixtures.corpus_df(spark, 0.001, d)
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    for cap, n_udf in ((-1, 1), (0, 3)):
+        out = pipeline.build_triples(
+            spark, corpus, d, emb, pipeline.PipelineConfig(articles_cap=cap)
+        )
+        assert plan_of(out["triples"]).count("ArrowEvalPython") == n_udf, cap
+
+
 def test_salted_join_structure(spark):
     """Salting must add the salt to the join keys (visible in the plan)
     and keep output invariant (invariance itself is covered by

@@ -40,9 +40,18 @@ def test_full_run_then_resume_noop(spark, world, tmp_path):
     assert t1
     # rerun over the same base: all buckets complete -> nothing
     # recomputed (manifest rows keep run_id r1), identical triples
-    out2 = runner.run_checkpointed(
-        spark, corpus, dictionary, embeddings, base, n_buckets=8, run_id="r2"
-    )
+    sc = spark.sparkContext
+    sc.setJobGroup("resume_noop", "unchanged rerun")
+    try:
+        out2 = runner.run_checkpointed(
+            spark, corpus, dictionary, embeddings, base, n_buckets=8, run_id="r2"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # each stage costs its fingerprint, nothing more: no stage function
+    # runs, nothing is written
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("resume_noop"))
+    assert n_jobs <= 22, n_jobs
     assert _triples_set(out2["triples"]) == t1
     for stage in (out1["_stages"]["ingest"], out1["_stages"]["mentions"]):
         m = M.read_manifest(spark, base, stage).toPandas()
