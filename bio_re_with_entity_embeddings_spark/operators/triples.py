@@ -50,8 +50,11 @@ def support_agg(pairs: DataFrame, articles_cap: int = 0) -> DataFrame:
     arrays): the count aggregate is map-side combinable, so the shuffle
     carries ~|pairs-distinct| partial rows instead of every (pair, doc)
     edge. At 10^12-file scale the supporting-evidence edges belong in
-    the separate ``pairs`` table (subj, obj, doc_id), not inline arrays
-    — this is the scale path; parity runs keep full sets (cap=0)."""
+    the separate ``pairs`` table (subj, obj, doc_id), not inline arrays.
+    The checkpointed runner's triples stage (plans/runner.py) takes
+    this branch under the scale config; ``build_triples`` routes that
+    config to its dictionary-encoded plan, which aggregates support
+    itself. Parity runs keep full sets (cap=0)."""
     if articles_cap < 0:
         return pairs.groupBy("subj", "obj").agg(
             F.count(F.lit(1)).alias("n_docs")

@@ -17,8 +17,8 @@ projection and the survivor hubs, which are eagerly materialized via
 unpopulated cache across independent subtrees, and the truncated
 lineage stops every downstream action of this ~30-job chain from
 re-analyzing the full upstream plan (measured 12.7-14.0 -> 10.6-10.8 s
-at the 50k-doc bench point). The checkpointed-runner path keeps
-DISK_ONLY persists (its stages materialize to parquet anyway).
+at the 50k-doc bench point). The checkpointed runner runs the same
+chain in its keep stage, over its materialized signals stage.
 
 Scale shape per stage:
 
@@ -58,6 +58,7 @@ from pyspark.storagelevel import StorageLevel
 from ..functions import text as TXT
 from ..operators import curation as CUR
 from ..operators import dedup as DD
+from . import manifest as M
 
 
 @dataclass
@@ -75,7 +76,6 @@ class CurationConfig:
     # runs its plan-time max-group count job — pass the hint at scale)
     quota_skew_salts: int | None = None
     quota_max_group_rows: int | None = None
-    eager_cache: bool = True
     # minhash knobs forwarded to minhash_near_duplicates
     minhash_hashes: int = 32
     minhash_bands: int = 8
@@ -119,15 +119,7 @@ def curate_corpus(
         # would silently require a literal 'text' column.
         benchmark = benchmark.select(F.col(text_col).alias("text"))
 
-    signals = docs.select(
-        F.col(id_col).cast("string").alias("doc"),
-        F.col(lang_col).alias("lang"),
-        F.col(text_col).alias("text"),
-        F.sha2(F.col(text_col), 256).alias("content_sha"),
-        TXT.token_count(text_col).alias("n_tokens"),
-        F.round(TXT.quality_score(text_col), 6).alias("quality"),
-        TXT.fingerprint(text_col).alias("fp"),
-    )
+    signals = _with_signals(_doc_rows(docs, id_col, text_col, lang_col))
     # Round 6 (guide §5 — localCheckpoint to cut lineage): the hub was
     # persist(DISK_ONLY) + count. The count job materialized the same
     # bytes, but every downstream ACTION (CC rounds, survivor joins,
@@ -136,24 +128,10 @@ def curate_corpus(
     # constant-size LogicalRDD instead. Measured: chain 12.7-14.0 s ->
     # 10.6-10.8 s at the 50k-doc point (same job count, smaller
     # driver gaps). eager=True is exactly the persist+count barrier.
-    if cfg.eager_cache:
-        signals = signals.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    else:
-        signals = signals.persist(StorageLevel.DISK_ONLY)
+    signals = signals.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
     parts = _chain(spark, signals, benchmark, cfg)
-    clean = parts["clean"]
-
-    final = clean
-    if cfg.quota > 0:
-        final = CUR.quota_sample(
-            clean,
-            cfg.quota_key,
-            cfg.quota,
-            "doc",
-            skew_salts=cfg.quota_skew_salts,
-            max_group_rows=cfg.quota_max_group_rows,
-        )
+    final = _quota(parts["clean"], cfg)
 
     return {
         "signals": signals,
@@ -214,41 +192,22 @@ def run_curation_checkpointed(
     one resumes exactly; prior configs' directories remain as orphans
     (rerun the old config and it resumes too). Fingerprinting the
     benchmark costs one map-combined count+fold scan per rerun —
-    benchmarks are dimension-sized by definition."""
-    import hashlib
+    benchmarks are dimension-sized by definition.
 
-    from . import manifest as M
-
+    The keep and corpus stages run ``curate_corpus``' own chain and
+    quota step, so both entry points give the same rows."""
     cfg = config or CurationConfig()
     if benchmark is not None:
         # same normalization as curate_corpus (the chain + the
         # fingerprint below both read 'text')
         benchmark = benchmark.select(F.col(text_col).alias("text"))
-    # lazy here: run_stage materializes each stage to parquet anyway,
-    # so the in-plan persist would only duplicate the checkpoint I/O
-    cfg_lazy = CurationConfig(**{**cfg.__dict__, "eager_cache": False})
 
-    sig_input = docs.select(
-        F.col(id_col).cast("string").alias("doc"),
-        F.col(lang_col).alias("lang"),
-        F.col(text_col).alias("text"),
-        F.sha2(F.col(text_col), 256).alias("content_sha"),
-    )
     signals = M.run_stage(
         spark,
         base_dir,
         "signals",
-        M.with_bucket(sig_input, "doc", n_buckets),
-        lambda df: df.select(
-            "doc",
-            "lang",
-            "text",
-            "content_sha",
-            "bucket",
-            TXT.token_count("text").alias("n_tokens"),
-            F.round(TXT.quality_score("text"), 6).alias("quality"),
-            TXT.fingerprint("text").alias("fp"),
-        ),
+        M.with_bucket(_doc_rows(docs, id_col, text_col, lang_col), "doc", n_buckets),
+        _with_signals,
         run_id=run_id,
     )
 
@@ -262,35 +221,14 @@ def run_curation_checkpointed(
         cfg.decon_hashed, cfg.max_decon_hits, cfg.minhash_hashes,
         cfg.minhash_bands, cfg.max_bucket_size,
     )
-    if benchmark is not None:
-        # duplicate-SENSITIVE fold (not the manifest's xor: xor of
-        # identical shas cancels pairwise, so {E,E} and {D,D} would
-        # collide and a swapped benchmark could silently resume the
-        # stale keep stage — the exact staleness class this hash
-        # exists to close). Decimal sum: exact, order-insensitive,
-        # multiplicity-sensitive, no ANSI long-overflow hazard.
-        bdf = benchmark.select(
-            F.conv(
-                F.substring(F.sha2(F.col("text"), 256), 1, 15), 16, 10
-            )
-            .cast("decimal(38,0)")
-            .alias("sha_i")
-        )
-        brow = bdf.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("sha_i").alias("s")
-        ).collect()[0]
-        bench_fp = (int(brow["n"]), str(brow["s"]))
-    else:
-        bench_fp = None
-
-    def _h(parts) -> str:
-        return hashlib.sha256(repr(parts).encode()).hexdigest()[:10]
-
-    keep_stage = f"keep_{_h((keep_knobs, bench_fp))}"
-    corpus_stage = f"corpus_{_h((keep_stage, cfg.quota_key, cfg.quota))}"
+    # duplicate-SENSITIVE fold: the manifest's xor would let a swapped
+    # benchmark silently resume the stale keep stage
+    bench_fp = None if benchmark is None else M.content_fp(benchmark, "text")
+    keep_stage = f"keep_{M.stage_hash((keep_knobs, bench_fp))}"
+    corpus_stage = f"corpus_{M.stage_hash((keep_stage, cfg.quota_key, cfg.quota))}"
 
     def keep_tail(sig: DataFrame) -> DataFrame:
-        out = _chain(spark, sig.drop("bucket"), benchmark, cfg_lazy)["clean"]
+        out = _chain(spark, sig.drop("bucket"), benchmark, cfg)["clean"]
         return out.withColumn("bucket", F.lit(0).cast("int"))
 
     keep = M.run_stage(
@@ -303,16 +241,7 @@ def run_curation_checkpointed(
     )
 
     def quota_tail(kept: DataFrame) -> DataFrame:
-        final = kept.drop("bucket")
-        if cfg.quota > 0:
-            final = CUR.quota_sample(
-                final,
-                cfg.quota_key,
-                cfg.quota,
-                "doc",
-                skew_salts=cfg.quota_skew_salts,
-                max_group_rows=cfg.quota_max_group_rows,
-            )
+        final = _quota(kept.drop("bucket"), cfg)
         return final.withColumn("bucket", F.lit(0).cast("int"))
 
     corpus = M.run_stage(
@@ -335,16 +264,50 @@ def run_curation_checkpointed(
     }
 
 
+def _doc_rows(docs: DataFrame, id_col: str, text_col: str, lang_col: str) -> DataFrame:
+    """The chain's input row: (doc, lang, text, content_sha)."""
+    return docs.select(
+        F.col(id_col).cast("string").alias("doc"),
+        F.col(lang_col).alias("lang"),
+        F.col(text_col).alias("text"),
+        F.sha2(F.col(text_col), 256).alias("content_sha"),
+    )
+
+
+def _with_signals(rows: DataFrame) -> DataFrame:
+    """Append the per-doc signals: token count, quality, fingerprint."""
+    return rows.select(
+        "*",
+        TXT.token_count("text").alias("n_tokens"),
+        F.round(TXT.quality_score("text"), 6).alias("quality"),
+        TXT.fingerprint("text").alias("fp"),
+    )
+
+
+def _quota(clean: DataFrame, cfg: CurationConfig) -> DataFrame:
+    """Per-group quota sample of the survivors (``quota`` 0: all)."""
+    if cfg.quota <= 0:
+        return clean
+    return CUR.quota_sample(
+        clean,
+        cfg.quota_key,
+        cfg.quota,
+        "doc",
+        skew_salts=cfg.quota_skew_salts,
+        max_group_rows=cfg.quota_max_group_rows,
+    )
+
+
 def _chain(
     spark: SparkSession,
     signals: DataFrame,
     benchmark: DataFrame | None,
     cfg: CurationConfig,
 ) -> dict[str, DataFrame]:
-    """Quality gate -> exact dedup -> minhash keepers -> decon over an
-    (already persisted or materialized) signals table — the one chain
-    both entry points share. Returns every intermediate; ``clean`` is
-    the decontaminated survivor set the quota stage consumes."""
+    """Quality gate -> exact dedup -> minhash keepers -> decon over a
+    materialized signals table — the one chain both entry points
+    share. Returns every intermediate; ``clean`` is the decontaminated
+    survivor set the quota stage consumes."""
     gate = F.col("quality") >= cfg.min_quality
     if cfg.langs is not None:
         gate = gate & F.col("lang").isin(cfg.langs)
@@ -365,19 +328,17 @@ def _chain(
     )
     # The hub of the tail: consumed by the minhash signature AND
     # shingle subtrees (evaluated eagerly by CC's localCheckpoint),
-    # then again by the survivor joins and the final output — persist
-    # like the pipeline's mention cache (DISK_ONLY for the same
-    # measured MemoryStore-contention reason) so the fp join runs once,
-    # not once per consumer (exchange reuse only dedupes byte-identical
-    # subtrees WITHIN one action; CC's checkpoint rounds are separate
-    # actions).
-    # localCheckpoint, not persist+count (round 6): same barrier, but
-    # downstream plans compile against a LogicalRDD instead of
-    # re-analyzing the exact-dedup lineage per action (see signals).
-    if cfg.eager_cache:
-        exact_survivors = exact_survivors.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    else:
-        exact_survivors = exact_survivors.persist(StorageLevel.DISK_ONLY)
+    # then again by the survivor joins and the final output —
+    # materialize it once (DISK_ONLY for the measured
+    # MemoryStore-contention reason of the pipeline's mention cache) so
+    # the fp join runs once, not once per consumer (exchange reuse only
+    # dedupes byte-identical subtrees WITHIN one action; CC's
+    # checkpoint rounds are separate actions). localCheckpoint, not
+    # persist+count (round 6): same barrier, but downstream plans
+    # compile against a LogicalRDD instead of re-analyzing the
+    # exact-dedup lineage per action, and no cache entry outlives the
+    # frames that use it.
+    exact_survivors = exact_survivors.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
     pairs = DD.minhash_near_duplicates(
         exact_survivors,
@@ -407,13 +368,8 @@ def _chain(
         # final anti-join — unpersisted, the keeper-election joins and
         # the drop anti-join would re-execute per consumer (exchange
         # reuse dedupes only byte-identical exchanges within one
-        # action). Persist ONLY on the lazy path (eager_cache): the
-        # checkpointed runner materializes the whole keep stage to
-        # parquet anyway. Returned as "near_survivors" so callers can
-        # unpersist (a cache entry reachable only through derived
-        # lineage could never be released).
-        if cfg.eager_cache:
-            near_survivors = near_survivors.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        # action).
+        near_survivors = near_survivors.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
         decon = CUR.decontaminate if cfg.decon_hashed else CUR.decontaminate_exact
         hits = decon(near_survivors, benchmark, "doc", "text", n=cfg.decon_n)
         contaminated = hits.where(

@@ -29,6 +29,7 @@ content-sha lineage invariant (BASELINE.json).
 
 from __future__ import annotations
 
+import hashlib
 import os
 import time
 import uuid
@@ -60,6 +61,32 @@ def with_bucket(df: DataFrame, key_col: str = "repo", n_buckets: int = 32) -> Da
 def sha_xor(df: DataFrame, sha_col: str = "content_sha"):
     """Order-insensitive lineage fold: bit_xor of sha prefix as int64."""
     return F.bit_xor(F.conv(F.substring(F.col(sha_col), 1, 15), 16, 10).cast("long"))
+
+
+def stage_hash(parts) -> str:
+    """Short stable hash of a stage's result-affecting inputs that its
+    row-level input fingerprint cannot see (config knobs, dimension
+    fingerprints) — the suffix of config-keyed stage names."""
+    return hashlib.sha256(repr(parts).encode()).hexdigest()[:10]
+
+
+def content_fp(df: DataFrame, col: str | None = None) -> tuple[int, str]:
+    """Duplicate-sensitive, order-insensitive content fingerprint of a
+    dimension-sized table: row count + decimal sum of the 15-hex-digit
+    sha2 prefixes of ``col`` (default: the whole row as JSON —
+    null/array-safe, unlike concat_ws, which silently drops nulls).
+    Not the manifest's xor fold: xor cancels identical rows pairwise,
+    so {E,E} and {D,D} would collide and a swapped dimension could
+    silently resume a stale stage. The decimal sum is exact, with no
+    ANSI long-overflow hazard. One map-combined job."""
+    value = F.col(col) if col else F.to_json(F.struct(*[F.col(c) for c in df.columns]))
+    d = df.select(
+        F.conv(F.substring(F.sha2(value, 256), 1, 15), 16, 10)
+        .cast("decimal(38,0)")
+        .alias("sha_i")
+    )
+    row = d.agg(F.count(F.lit(1)).alias("n"), F.sum("sha_i").alias("s")).collect()[0]
+    return (int(row["n"]), str(row["s"]))
 
 
 def _manifest_path(base: str, stage: str) -> str:

@@ -50,6 +50,14 @@ def ingest(corpus: DataFrame, langs: list[str] | None = None) -> DataFrame:
     ).withColumn("content_sha", F.sha2(F.col("content"), 256))
 
 
+#: Scale-path AQE advisory partition size. The default 64MB coalesces
+#: the explosion join's output into few, uneven tasks (observed 20s vs
+#: 58s task walls in one stage); more, smaller tasks load-balance it.
+#: Set on the session: the lazy plans execute after build_triples
+#: returns, so a set/restore scope cannot work.
+_ADVISORY_PARTITION_BYTES = "16m"
+
+
 @dataclass
 class PipelineConfig:
     relations: list[tuple[str, str]] = field(
@@ -62,28 +70,14 @@ class PipelineConfig:
     threshold: float = 0.0
     salt_buckets: int = 0
     max_entities_per_doc: int = 0
-    articles_cap: int = 0  # >0: bound per-pair article sets; <0: scale path
+    # >0: bound per-pair article sets; <0: none (build_triples: scale path)
+    articles_cap: int = 0
     langs: list[str] | None = None
     repo_partitions: int = 0  # >0: explicit repartition on hash(repo)
     canonicalize: bool = False  # stage 7: minhash/CC entity dedup + remap
-    eager_cache: bool = True  # materialize shared mention cache before fan-out
     # (source_type, target_type) -> predicate overrides; falls back to
     # triples_op.predicate_for (the reference's per-type-pair datasets).
     predicates: dict[tuple[str, str], str] | None = None
-    # Scale-path AQE advisory partition size ("16m"): more, smaller
-    # tasks load-balance the explosion join (observed 20s vs 58s task
-    # walls at 64MB). Session-scoped knob, surfaced here instead of
-    # mutated silently; None leaves the session conf untouched.
-    advisory_partition_bytes: str | None = "16m"
-    # Scale path: repartition the detector output by dk BEFORE the
-    # persist so the cached table carries HashPartitioning(dk) and the
-    # fused self-join plans ZERO exchanges (one exchange at cache time
-    # instead of two at join time — on a multi-executor cluster that
-    # halves the NETWORK bytes of the widest stage; set True there).
-    # Default False for local mode: measured a wash on one box (the
-    # shuffles are memory-local) and the exchange-free join forfeits
-    # AQE's coalesce/skew freedom on that stage.
-    prepartition_by_dk: bool = False
 
     def predicate(self, src_t: str, tgt_t: str) -> str:
         if self.predicates and (src_t, tgt_t) in self.predicates:
@@ -140,21 +134,40 @@ def _build_parity(
     # DISK_ONLY, not MEMORY_AND_DISK: MemoryStore block registration
     # serializes under a shared lock at high task concurrency.
     mentions = mentions.persist(StorageLevel.DISK_ONLY)
-    mentions_dedup = mentions.select(
-        "doc_id", "entity_id", "entity_type"
-    ).distinct()
-    if cfg.eager_cache:
-        # AQE materializes independent query stages CONCURRENTLY; an
-        # unpopulated cache gets recomputed per racing subtree — the
-        # eager barrier populates it before the fan-out.
-        # localCheckpoint, not persist+count (round 6, guide §5): the
-        # per-relation fan-out below runs one action per relation,
-        # each of which otherwise re-analyzes the detector lineage;
-        # the checkpoint compiles them against a LogicalRDD.
-        mentions_dedup = mentions_dedup.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    else:
-        mentions_dedup = mentions_dedup.persist(StorageLevel.DISK_ONLY)
+    # AQE materializes independent query stages CONCURRENTLY; an
+    # unpopulated cache gets recomputed per racing subtree — the eager
+    # barrier populates it before the fan-out. localCheckpoint, not
+    # persist+count (round 6, guide §5): the per-relation fan-out runs
+    # one action per relation, each of which otherwise re-analyzes the
+    # detector lineage; the checkpoint compiles them against a
+    # LogicalRDD.
+    mentions_dedup = (
+        mentions.select("doc_id", "entity_id", "entity_type")
+        .distinct()
+        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    )
+    triples, all_pairs = _kg_tail(
+        spark, mentions_dedup, dict_entries, entities, embeddings, cfg
+    )
+    return {
+        "docs": docs,
+        "mentions": mentions,
+        "doc2entity": aggregates.doc_to_entities(mentions),
+        "entity2doc": aggregates.entity_to_docs(mentions),
+        "pairs": all_pairs,
+        "triples": triples,
+    }
 
+
+def _kg_tail(
+    spark, mentions_dedup, dict_entries, entities, embeddings, cfg
+) -> tuple[DataFrame, DataFrame]:
+    """String-keyed KG tail shared by ``build_triples``' parity path and
+    the checkpointed runner's triples stage (plans/runner.py): distinct
+    (doc_id, entity_id, entity_type) rows -> (triples, pairs). The
+    caller owns the materialization of ``mentions_dedup``.
+    ``articles_cap < 0`` collects no article sets (support_agg's
+    map-combined branch)."""
     triple_parts: list[DataFrame] = []
     pair_parts: list[DataFrame] = []
     for src_t, tgt_t in cfg.relations:
@@ -187,15 +200,7 @@ def _build_parity(
 
     if cfg.canonicalize:
         triples = _canonicalize(spark, triples, dict_entries)
-
-    return {
-        "docs": docs,
-        "mentions": mentions,
-        "doc2entity": aggregates.doc_to_entities(mentions),
-        "entity2doc": aggregates.entity_to_docs(mentions),
-        "pairs": all_pairs,
-        "triples": triples,
-    }
+    return triples, all_pairs
 
 
 def _build_scale(
@@ -215,16 +220,9 @@ def _build_scale(
     all_types = sorted({e[2] for e in dict_entries})
     type_codes = {t: i for i, t in enumerate(all_types)}
 
-    # Smaller AQE advisory size for the explosion join: the default
-    # 64MB coalesces its output into few, uneven tasks (observed 20s vs
-    # 58s task walls in one stage) — more, smaller tasks load-balance.
-    # Surfaced as a config knob (lazy plans execute after this returns,
-    # so a set/restore scope cannot work — None opts out instead).
-    if cfg.advisory_partition_bytes:
-        spark.conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            cfg.advisory_partition_bytes,
-        )
+    spark.conf.set(
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes", _ADVISORY_PARTITION_BYTES
+    )
 
     # ONE detector pass emits a ROW PER DOC with the packed entity set
     # (et = entity_idx*256 + type_code, sorted; eid<2^23 asserted).
@@ -242,21 +240,11 @@ def _build_scale(
         F.xxhash64("doc_id", F.lit(1)).alias("dk2"),
         "ets",
     )
-    if cfg.prepartition_by_dk:
-        # Cached HashPartitioning(dk) is inherited by BOTH (alias-only)
-        # projections of the join strategy's self-join, so it plans
-        # zero additional exchanges (see PipelineConfig docstring).
-        arrs = arrs.repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")), "dk"
-        )
-    if cfg.eager_cache:
-        # localCheckpoint, not persist+count (round 6, guide §5): same
-        # materialization barrier, but the pair-explosion, support and
-        # doc2entity consumers compile against a LogicalRDD instead of
-        # re-analyzing the Arrow-detector lineage per action.
-        arrs = arrs.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    else:
-        arrs = arrs.persist(StorageLevel.DISK_ONLY)
+    # localCheckpoint, not persist+count (round 6, guide §5): one
+    # materialization barrier, and the pair-explosion, support and
+    # doc2entity consumers compile against a LogicalRDD instead of
+    # re-analyzing the Arrow-detector lineage per action.
+    arrs = arrs.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
     rel_code = (F.col("stc") * 256 + F.col("ttc")).alias("rc")
     wanted_codes = [

@@ -16,42 +16,13 @@ one bucket, so partial corpora resume repo-atomically.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fixtures
 from ..operators import mentions as mentions_op
-from ..operators import scoring, triples as triples_op
 from . import manifest as M
 from . import pipeline as P
-
-
-def _h(parts) -> str:
-    return hashlib.sha256(repr(parts).encode()).hexdigest()[:10]
-
-
-def _content_fp(df: DataFrame) -> tuple[int, str]:
-    """Duplicate-sensitive, order-insensitive content fingerprint of a
-    (small) dimension table — every column, row serialized as JSON
-    (null/array-safe, unlike concat_ws which silently drops nulls):
-    decimal sum of 15-hex-digit sha2 prefixes + row count. Same
-    construction and rationale as the curation runner's benchmark
-    fingerprint (plans/curation.py): the manifest's xor fold cancels
-    identical rows pairwise, so a swapped-but-multiset-colliding
-    dimension could silently resume a stale stage — the exact class
-    this fold closes. ONE extra map-combined job over the dimension
-    per rerun (the embeddings/entities tables are the broadcast dims —
-    vocabulary-sized, not corpus-sized)."""
-    row_json = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
-    d = df.select(
-        F.conv(F.substring(F.sha2(row_json, 256), 1, 15), 16, 10)
-        .cast("decimal(38,0)")
-        .alias("sha_i")
-    )
-    row = d.agg(F.count(F.lit(1)).alias("n"), F.sum("sha_i").alias("s")).collect()[0]
-    return (int(row["n"]), str(row["s"]))
 
 
 def run_checkpointed(
@@ -82,18 +53,23 @@ def run_checkpointed(
     visible in the stage's row-level input fingerprint (the same
     silently-stale-resume closure as the curation runner's
     ``keep_<hash>``): the mentions stage name carries the dictionary
-    hash; the triples stage name carries the relation/threshold/cap
-    knobs plus content fingerprints of the embeddings and entities
-    dimensions. Rerunning over the same working dir with a changed
+    hash; the triples stage name carries the relation/threshold/cap/
+    canonicalize knobs plus content fingerprints of the embeddings and
+    entities dimensions. Rerunning over the same working dir with a changed
     dictionary, embeddings matrix, entity dimension, or triple config
     therefore computes FRESH stages instead of serving stale parquet;
     unchanged reruns still skip everything. Plan-only knobs
-    (salt_buckets, repo_partitions, eager_cache, prepartition_by_dk,
-    advisory_partition_bytes) are deliberately excluded — they change
-    the physical plan, never the rows. Resolved names are returned
-    under ``_stages``. Pre-existing working dirs written before this
-    closure (fixed names ``mentions``/``triples``) are simply
-    recomputed under the new names — orphaned but never served.
+    (salt_buckets, repo_partitions) are deliberately excluded — they
+    change the physical plan, never the rows. Resolved names are
+    returned under ``_stages``. Working dirs written before a change
+    of the identity (fixed names ``mentions``/``triples``, or a triples
+    name without the canonicalize knob) are simply recomputed under
+    the new names — orphaned but never served.
+
+    The triples stage runs ``build_triples``' own string-keyed tail
+    (plans/pipeline.py::_kg_tail) over the materialized mention table,
+    so every config gives ``build_triples``' rows — under
+    ``articles_cap < 0`` with empty article sets, as on its scale path.
     """
     cfg = config or P.PipelineConfig()
 
@@ -107,7 +83,7 @@ def run_checkpointed(
     )
 
     dict_entries = [(e.surface, e.entity_id, e.entity_type) for e in dictionary]
-    dict_fp = _h(tuple(sorted(dict_entries)))
+    dict_fp = M.stage_hash(tuple(sorted(dict_entries)))
     mentions_stage = f"mentions_{dict_fp}"
 
     def detect(df: DataFrame) -> DataFrame:
@@ -139,47 +115,24 @@ def run_checkpointed(
         # already part of the identity, no row fold needed
         ent_fp: tuple = ("derived", dict_fp, int(n_vecs))
     else:
-        ent_fp = _content_fp(entities)
-    emb_fp = _content_fp(embeddings)
+        ent_fp = M.content_fp(entities)
+    emb_fp = M.content_fp(embeddings)
     triple_knobs = (
         tuple(cfg.relations),
         tuple(cfg.predicate(s, t) for s, t in cfg.relations),
         cfg.threshold,
         cfg.max_entities_per_doc,
         cfg.articles_cap,
+        # canonicalization reads the whole dictionary, which the
+        # mention rows cannot reveal
+        cfg.canonicalize and dict_fp,
     )
-    triples_stage = f"triples_{_h((triple_knobs, emb_fp, ent_fp))}"
-
-    from ..operators import pairs as pairs_op
-
-    def build_triples_tail(mention_rows: DataFrame) -> DataFrame:
-        mentions_dedup = mention_rows.select(
-            "doc_id", "entity_id", "entity_type"
-        ).distinct()
-        triple_parts = []
-        for src_t, tgt_t in cfg.relations:
-            rel_pairs = pairs_op.generate_pairs(
-                mentions_dedup, src_t, tgt_t,
-                salt_buckets=cfg.salt_buckets,
-                max_entities_per_doc=cfg.max_entities_per_doc,
-                already_distinct=True,
-            )
-            support = triples_op.support_agg(rel_pairs, max(cfg.articles_cap, 0))
-            scored = scoring.score_pairs(support, entities, embeddings)
-            triple_parts.append(
-                triples_op.emit_triples(
-                    scored, src_t, tgt_t, cfg.threshold,
-                    pred=cfg.predicate(src_t, tgt_t),
-                )
-            )
-        triples = triple_parts[0]
-        for t in triple_parts[1:]:
-            triples = triples.unionByName(t)
-        return triples.withColumn("bucket", F.lit(0).cast("int"))
+    triples_stage = f"triples_{M.stage_hash((triple_knobs, emb_fp, ent_fp))}"
 
     tail_input = mentions.withColumn("bucket", F.lit(0).cast("int"))
     triples = M.run_stage(
-        spark, base_dir, triples_stage, tail_input, build_triples_tail,
+        spark, base_dir, triples_stage, tail_input,
+        lambda rows: _triples_tail(spark, rows, dict_entries, entities, embeddings, cfg),
         run_id=run_id,
     )
 
@@ -193,6 +146,20 @@ def run_checkpointed(
             "triples": triples_stage,
         },
     }
+
+
+def _triples_tail(
+    spark, mention_rows, dict_entries, entities, embeddings, cfg
+) -> DataFrame:
+    """The triples stage: the mention table's distinct (doc, entity)
+    rows through the pipeline's KG tail, as the one global bucket."""
+    mentions_dedup = mention_rows.select(
+        "doc_id", "entity_id", "entity_type"
+    ).distinct()
+    triples, _ = P._kg_tail(
+        spark, mentions_dedup, dict_entries, entities, embeddings, cfg
+    )
+    return triples.withColumn("bucket", F.lit(0).cast("int"))
 
 
 def verify_lineage(spark: SparkSession, corpus: DataFrame, base_dir: str, n_buckets: int = 32) -> bool:

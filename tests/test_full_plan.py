@@ -237,3 +237,39 @@ def test_kg_config_change_recomputes(spark, world, kg_inputs, tmp_path):
     m = M.read_manifest(spark, f"{base}/kg", st1).toPandas()
     assert set(m["run_id"]) == {"r1"}
     assert _triples_set(out3["triples"]) == t1
+
+
+def test_stage_names_pinned(ck_out):
+    """Stage names are the resume keys of existing working dirs: the
+    ingest, mentions, signals, keep and corpus names of this fixed
+    fixture must not move (the triples name carries the canonicalize
+    knob). Pins the config hashes and the dictionary, benchmark,
+    embeddings and entities fingerprints behind them."""
+    assert ck_out["cur__stages"] == {
+        "signals": "signals",
+        "keep": "keep_d29f92bdfa",
+        "corpus": "corpus_be4b8c62d1",
+    }
+    assert ck_out["_stages"] == {
+        "ingest": "ingest",
+        "mentions": "mentions_502bb91c5e",
+        "triples": "triples_1c9b5a947c",
+    }
+
+
+def test_cold_run_leaves_no_cached_plan(spark, world, kg_inputs, tmp_path):
+    """A cold checkpointed run registers no cached plan that outlives
+    it: every materialization inside the chain is a localCheckpoint or
+    a parquet stage, never a persist nothing unpersists."""
+    import gc
+
+    spark.catalog.clearCache()
+    corpus, bench = world
+    entries, emb, entities = kg_inputs
+    PF.run_full_checkpointed(
+        spark, corpus, entries, emb, str(tmp_path / "leak"), benchmark=bench,
+        n_buckets=8, curation_config=_ccfg(), pipeline_config=_pcfg(),
+        run_id="r1", entities=entities, doc_key=F.col("repo"),
+    )
+    gc.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

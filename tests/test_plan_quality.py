@@ -196,6 +196,35 @@ def test_cosine_udf_runs_once_per_scored_frame(spark):
         assert plan_of(out["triples"]).count("ArrowEvalPython") == n_udf, cap
 
 
+def test_runner_triples_stage_plan_shape(spark, tmp_path):
+    """The checkpointed runner's default-config triples stage over a
+    mention parquet: the cosine kernel once per relation (3
+    ArrowEvalPython for 3 relations) and no cached-table scan — the
+    stage reads its parquet input, it does not persist it."""
+    from bio_re_with_entity_embeddings_spark import fixtures
+    from bio_re_with_entity_embeddings_spark.deploy import ensure_shipped
+    from bio_re_with_entity_embeddings_spark.operators import mentions as M
+    from bio_re_with_entity_embeddings_spark.plans import pipeline, runner
+
+    ensure_shipped(spark)
+    d = fixtures.make_dictionary()
+    corpus = fixtures.corpus_df(spark, 0.001, d)
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    entries = [(e.surface, e.entity_id, e.entity_type) for e in d]
+    path = str(tmp_path / "mentions")
+    M.detect_mentions(pipeline.ingest(corpus), entries).write.parquet(path)
+    n_vecs = emb.selectExpr("max(vec_id) + 1 AS n").first()["n"]
+    entities = fixtures.entities_df(spark, d, int(n_vecs))
+    cfg = pipeline.PipelineConfig()
+    assert len(cfg.relations) == 3
+    tail = runner._triples_tail(
+        spark, spark.read.parquet(path), entries, entities, emb, cfg
+    )
+    plan = plan_of(tail)
+    assert plan.count("ArrowEvalPython") == 3, plan
+    assert "InMemoryTableScan" not in plan, plan
+
+
 def test_salted_join_structure(spark):
     """Salting must add the salt to the join keys (visible in the plan)
     and keep output invariant (invariance itself is covered by

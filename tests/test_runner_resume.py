@@ -171,3 +171,46 @@ def test_dictionary_change_recomputes_mentions(spark, world, tmp_path):
     )
     assert _triples_set(out2["triples"]) == _triples_set(clean["triples"])
     assert _triples_set(out2["triples"]) != t1
+
+
+def test_canonicalize_through_runner(spark, world, tmp_path):
+    """The runner's triples stage canonicalizes like ``build_triples``,
+    and toggling ``canonicalize`` over one working dir re-keys the
+    triples stage instead of serving the other config's rows."""
+    dictionary, corpus, embeddings = world
+    base = str(tmp_path / "ckcanon")
+    plain = runner.run_checkpointed(
+        spark, corpus, dictionary, embeddings, base, n_buckets=4, run_id="r1"
+    )
+    cfg = P.PipelineConfig(canonicalize=True)
+    canon = runner.run_checkpointed(
+        spark, corpus, dictionary, embeddings, base, n_buckets=4,
+        config=cfg, run_id="r2",
+    )
+    assert canon["_stages"]["triples"] != plain["_stages"]["triples"]
+    lazy = P.build_triples(spark, corpus, dictionary, embeddings, cfg)
+    got = _triples_set(canon["triples"])
+    assert got == _triples_set(lazy["triples"])
+    assert got != _triples_set(plain["triples"])
+
+
+def test_scale_config_through_runner(spark, world, tmp_path):
+    """Under the scale config the runner returns the scale path's rows:
+    empty article sets and the same (subj, pred, obj, n_docs, score)."""
+    dictionary, corpus, embeddings = world
+    cfg = P.PipelineConfig(articles_cap=-1)
+    ck = runner.run_checkpointed(
+        spark, corpus, dictionary, embeddings, str(tmp_path / "ckscale"),
+        n_buckets=4, config=cfg,
+    )
+    rows = ck["triples"].collect()
+    assert rows and all(len(r.articles) == 0 for r in rows)
+    lazy = P.build_triples(spark, corpus, dictionary, embeddings, cfg)
+
+    def key(rs):
+        return {
+            (r.subj, r.pred, r.obj, r.n_docs, round(float(r.score), 6))
+            for r in rs
+        }
+
+    assert key(rows) == key(lazy["triples"].collect())
