@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 
 def _char_shingles(col, n: int = 3):
@@ -262,7 +263,12 @@ def connected_components(
     # every star round's actions run inside this scope (see
     # _adaptive_off: explicit widths, AQE only fragments the rounds
     # into extra jobs); the returned comp aggregate reads the
-    # already-materialized final checkpoint.
+    # already-materialized final checkpoint. The input is materialized
+    # first, under the session's AQE: planned with AQE off, a lazy
+    # input (minhash pairs) runs its whole plan statically, and its
+    # two uses in the symmetric edge union ran the signature stage
+    # twice, once for a broadcast build.
+    edges = edges.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     with _adaptive_off(edges.sparkSession):
         return _cc_loop(edges, max_iterations, stats)
 

@@ -177,7 +177,10 @@ def run_curation_checkpointed(
                a crash between keep and corpus resumes exactly.
 
     Per-bucket manifests record rows in/out, content-sha xor fold and
-    wall; reruns are idempotent per-bucket dynamic overwrites.
+    wall; reruns are idempotent per-bucket dynamic overwrites. Only
+    signals scans its input for the fingerprint: keep takes its input
+    stats from signals' output stats folded into one bucket, corpus
+    from keep's (plans/manifest.py::_run_stage).
 
     CONFIG/BENCHMARK LINEAGE: run_stage's skip test covers only the
     stage INPUT (count + sha fold) — on its own it would silently
@@ -202,7 +205,7 @@ def run_curation_checkpointed(
         # fingerprint below both read 'text')
         benchmark = benchmark.select(F.col(text_col).alias("text"))
 
-    signals = M.run_stage(
+    signals, signal_stats = M._run_stage(
         spark,
         base_dir,
         "signals",
@@ -231,21 +234,23 @@ def run_curation_checkpointed(
         out = _chain(spark, sig.drop("bucket"), benchmark, cfg)["clean"]
         return out.withColumn("bucket", F.lit(0).cast("int"))
 
-    keep = M.run_stage(
+    keep, keep_stats = M._run_stage(
         spark,
         base_dir,
         keep_stage,
         signals.withColumn("bucket", F.lit(0).cast("int")),
         keep_tail,
         run_id=run_id,
+        input_stats=M.one_bucket(signal_stats),
     )
 
     def quota_tail(kept: DataFrame) -> DataFrame:
         final = _quota(kept.drop("bucket"), cfg)
         return final.withColumn("bucket", F.lit(0).cast("int"))
 
-    corpus = M.run_stage(
-        spark, base_dir, corpus_stage, keep, quota_tail, run_id=run_id
+    corpus, _ = M._run_stage(
+        spark, base_dir, corpus_stage, keep, quota_tail, run_id=run_id,
+        input_stats=keep_stats,
     )
     return {
         "signals": signals,

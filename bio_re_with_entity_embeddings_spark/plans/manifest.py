@@ -17,9 +17,15 @@ recomputes exactly the touched buckets (per-bucket dynamic partition
 overwrite keeps that idempotent). Both sides hold at most n_buckets
 rows, so the driver compares them: an unchanged stage returns its
 checkpoint without running, a changed one runs on its stale buckets'
-rows only. Double-written manifest rows are deduped on read by (stage,
-partition_id) keeping the LATEST (ts, run_id) row — the data directory
-always reflects the last writer.
+rows only. Double-written manifest rows are deduped on the driver by
+partition_id, keeping the LATEST (ts, run_id) row — the data
+directory always reflects the last writer.
+
+Each fingerprint is taken once per run. A stage's output stats are
+observed on the write that produces them, never re-read; a stage fed
+by another stage's checkpoint takes its input stats from that stage's
+output stats (``_run_stage``'s ``input_stats``; ``one_bucket`` for a
+global stage), so only a stage over raw input scans it.
 
 Lineage: ``content_sha_xor`` is an order-insensitive XOR-fold of the
 rows' ``content_sha`` (first 15 hex chars as int64) — equality between
@@ -35,8 +41,7 @@ import time
 import uuid
 
 import pandas as pd
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -49,7 +54,17 @@ _MANIFEST_SCHEMA = T.StructType([
         ("ts", T.LongType()),
     )
 ])
+# Read schema: manifests written before the wall_ms -> run_wall_ms
+# rename stay resumable (ADVICE r3); a file lacking a column reads it
+# as null, so old, new and mixed directories resolve file-order
+# independently without a schema-inference job.
+_READ_SCHEMA = T.StructType(
+    _MANIFEST_SCHEMA.fields + [T.StructField("wall_ms", T.LongType())]
+)
 _ZERO = "%016x" % 0
+
+#: bucket -> (row count, ``%016x`` sha fold), as a manifest stores them
+Stats = dict[int, tuple[int, str]]
 
 
 def with_bucket(df: DataFrame, key_col: str = "repo", n_buckets: int = 32) -> DataFrame:
@@ -58,9 +73,13 @@ def with_bucket(df: DataFrame, key_col: str = "repo", n_buckets: int = 32) -> Da
     )
 
 
+def _sha_long(sha_col: str):
+    return F.conv(F.substring(F.col(sha_col), 1, 15), 16, 10).cast("long")
+
+
 def sha_xor(df: DataFrame, sha_col: str = "content_sha"):
     """Order-insensitive lineage fold: bit_xor of sha prefix as int64."""
-    return F.bit_xor(F.conv(F.substring(F.col(sha_col), 1, 15), 16, 10).cast("long"))
+    return F.bit_xor(_sha_long(sha_col))
 
 
 def stage_hash(parts) -> str:
@@ -89,6 +108,16 @@ def content_fp(df: DataFrame, col: str | None = None) -> tuple[int, str]:
     return (int(row["n"]), str(row["s"]))
 
 
+def one_bucket(stats: Stats) -> Stats:
+    """``stats`` of a bucketed table as they read once every row is put
+    in bucket 0 (the input of a global stage): row counts summed, folds
+    xor-ed. An empty table has no bucket."""
+    n, fold = 0, 0
+    for rows, sha in stats.values():
+        n, fold = n + rows, fold ^ int(sha, 16)
+    return {0: (n, "%016x" % fold)} if n else {}
+
+
 def _manifest_path(base: str, stage: str) -> str:
     return os.path.join(base, stage, "_manifest")
 
@@ -97,57 +126,54 @@ def _data_path(base: str, stage: str) -> str:
     return os.path.join(base, stage, "data")
 
 
-def read_manifest(spark: SparkSession, base: str, stage: str) -> DataFrame | None:
-    """The stage's manifest, one row per bucket, or ``None`` when the
-    ``_manifest`` directory is missing or holds no part file yet. Any
-    other read failure (an unreadable part file) raises: treating it as
-    "no manifest" would recompute the stage on every run and keep
-    appending to the broken directory."""
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path``, for driver-side probes and deletes."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _manifest_rows(spark: SparkSession, base: str, stage: str) -> dict[int, Row] | None:
+    """partition_id -> the bucket's latest manifest row, or ``None``
+    when the ``_manifest`` directory is missing or holds no row yet.
+    The directory is probed first, so a cold stage runs no failing
+    read; an unreadable part file raises (treating it as "no manifest"
+    would recompute the stage on every run and keep appending to the
+    broken directory). One job: the rows are collected and deduped on
+    the driver — the latest (ts, run_id) row per bucket, since the
+    per-bucket dynamic overwrite means data reflects the last writer
+    and a bucket recomputed for changed input must not resurrect stale
+    input stats."""
     path = _manifest_path(base, stage)
-    try:
-        # mergeSchema: a dir holding pre-rename (wall_ms) and current
-        # (run_wall_ms) rows must not resolve file-order dependently.
-        m = spark.read.option("mergeSchema", "true").parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            return None
-        raise
-    # Migration: manifests written before the wall_ms -> run_wall_ms
-    # rename stay resumable (ADVICE r3) — resolve whichever exists.
-    cols = set(m.columns)
-    if "run_wall_ms" not in cols:
-        m = m.withColumn(
-            "run_wall_ms",
-            F.col("wall_ms").cast("long")
-            if "wall_ms" in cols
-            else F.lit(None).cast("long"),
-        )
-    elif "wall_ms" in cols:
-        m = m.withColumn(
-            "run_wall_ms",
-            F.coalesce(F.col("run_wall_ms"), F.col("wall_ms").cast("long")),
-        )
-    # Dedupe re-runs: keep the LATEST manifest row per partition (the
-    # per-bucket dynamic overwrite means data reflects the last writer;
-    # a bucket recomputed for changed input must not resurrect stale
-    # input stats). (ts, run_id) orders deterministically.
-    w_cols = ["stage", "partition_id"]
-    return (
-        m.groupBy(*w_cols)
-        .agg(
-            F.max_by(
-                F.struct(
-                    "rows_in", "rows_out", "content_sha_xor", "in_sha_xor",
-                    "run_wall_ms", "run_id",
-                ),
-                F.struct("ts", "run_id"),
-            ).alias("s")
-        )
-        .select(*w_cols, "s.*")
+    fs, p = _hadoop_path(spark, path)
+    if not fs.exists(p):
+        return None
+    latest: dict[int, Row] = {}
+    for r in spark.read.schema(_READ_SCHEMA).parquet(path).collect():
+        b = r["partition_id"]
+        if b not in latest or (r["ts"], r["run_id"]) > (latest[b]["ts"], latest[b]["run_id"]):
+            latest[b] = r
+    return latest or None
+
+
+def read_manifest(spark: SparkSession, base: str, stage: str) -> DataFrame | None:
+    """The stage's manifest, one row per bucket (its latest), or
+    ``None`` when the ``_manifest`` directory is missing or holds no
+    row yet. Any other read failure (an unreadable part file) raises."""
+    rows = _manifest_rows(spark, base, stage)
+    if rows is None:
+        return None
+    schema = T.StructType([f for f in _MANIFEST_SCHEMA.fields if f.name != "ts"])
+    return spark.createDataFrame(
+        [
+            tuple(r[c] for c in schema.names[:-2])
+            + (r["wall_ms"] if r["run_wall_ms"] is None else r["run_wall_ms"], r["run_id"])
+            for r in rows.values()
+        ],
+        schema,
     )
 
 
-def _bucket_stats(df: DataFrame, sha_col: str) -> dict[int, tuple[int, str]]:
+def _bucket_stats(df: DataFrame, sha_col: str) -> Stats:
     """bucket -> (row count, hex sha fold): one map-combined aggregate,
     collected (at most n_buckets rows). The fold is formatted in Spark,
     ``%016x`` of the fold coalesced to 0, exactly as manifests store it
@@ -159,6 +185,29 @@ def _bucket_stats(df: DataFrame, sha_col: str) -> dict[int, tuple[int, str]]:
         F.format_string("%016x", F.coalesce(fold, F.lit(0).cast("long"))).alias("fold"),
     ).collect()
     return {r["bucket"]: (r["n"], r["fold"]) for r in rows}
+
+
+def _write_observed(out: DataFrame, data: str, buckets: list[int], sha_col: str) -> Stats:
+    """Overwrite ``out``'s buckets under ``data`` and return each of
+    ``buckets``' (rows, fold) — ``_bucket_stats`` of what was written,
+    observed on the write itself instead of re-read. The per-write
+    dynamic option replaces only the buckets ``out`` has rows for and
+    leaves the session conf alone."""
+    bucket = F.col("bucket")
+    sha = _sha_long(sha_col) if sha_col in out.columns else F.lit(0).cast("long")
+    obs = Observation()
+    out.observe(obs, *[
+        agg
+        for i, b in enumerate(buckets)
+        for agg in (
+            F.count_if(bucket == b).alias(f"n{i}"),
+            F.bit_xor(F.when(bucket == b, sha)).alias(f"x{i}"),
+        )
+    ]).write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "bucket"
+    ).parquet(data)
+    got = obs.get
+    return {b: (got[f"n{i}"], "%016x" % (got[f"x{i}"] or 0)) for i, b in enumerate(buckets)}
 
 
 def run_stage(
@@ -182,58 +231,80 @@ def run_stage(
     rows. An unchanged stage (every bucket done, none orphaned) costs
     just that: it returns its checkpoint without calling ``fn`` or
     writing anything. Otherwise ``fn`` sees only the stale buckets'
-    rows, which are idempotently overwritten."""
+    rows, which are idempotently overwritten; their output stats are
+    observed on that write."""
+    return _run_stage(spark, base, stage, bucketed_input, fn, run_id, sha_col)[0]
+
+
+def _run_stage(
+    spark: SparkSession,
+    base: str,
+    stage: str,
+    bucketed_input: DataFrame,
+    fn,
+    run_id: str | None = None,
+    sha_col: str = "content_sha",
+    input_stats: Stats | None = None,
+) -> tuple[DataFrame, Stats]:
+    """``run_stage``, also returning the stage's output stats: every
+    bucket with rows, as ``_bucket_stats`` of the returned frame would
+    give them, taken from the manifest and the write. A runner passes
+    them on as the next stage's ``input_stats``, which stand in for
+    the scan of ``bucketed_input`` — they must be the stats of exactly
+    that frame (buckets with no rows left out)."""
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.perf_counter()
-    manifest = read_manifest(spark, base, stage)
-    prev = {} if manifest is None else {r["partition_id"]: r for r in manifest.collect()}
-    cur = _bucket_stats(bucketed_input, sha_col)
+    prev = _manifest_rows(spark, base, stage)
+    cur = _bucket_stats(bucketed_input, sha_col) if input_stats is None else input_stats
     stale = sorted(
         b for b, s in cur.items()
-        if b not in prev or (prev[b]["rows_in"], prev[b]["in_sha_xor"]) != s
+        if prev is None or b not in prev or (prev[b]["rows_in"], prev[b]["in_sha_xor"]) != s
     )
     # ORPHANS: manifested buckets whose input vanished ENTIRELY (and
     # not tombstoned yet, rows 0/0). Dynamic overwrite never touches
     # their directories, so deleted docs would silently persist in
     # stage output: delete them and tombstone the manifest.
     orphaned = sorted(
-        b for b, r in prev.items()
+        b for b, r in (prev or {}).items()
         if b not in cur and (r["rows_in"], r["rows_out"]) != (0, 0)
     )
     data = _data_path(base, stage)
-    if manifest is not None and not stale and not orphaned:
-        return spark.read.parquet(data)
+    out_stats = {
+        b: (r["rows_out"], r["content_sha_xor"])
+        for b, r in (prev or {}).items()
+        if r["rows_out"] and b not in stale and b not in orphaned
+    }
+    if prev is not None and not stale and not orphaned:
+        return spark.read.parquet(data), out_stats
 
     # Stale directories go too: dynamic overwrite replaces only the
     # buckets fn emits rows for, so a stale bucket whose new output is
     # empty would keep its old rows.
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
     for b in orphaned + stale:
-        p = jvm.org.apache.hadoop.fs.Path(os.path.join(data, f"bucket={b}"))
-        p.getFileSystem(hconf).delete(p, True)
+        fs, p = _hadoop_path(spark, os.path.join(data, f"bucket={b}"))
+        fs.delete(p, True)
 
-    # A literal bucket filter prunes partitions of a checkpointed input;
-    # bucket is never null (pmod of a hash), so no row is lost.
-    todo = (
-        bucketed_input if manifest is None
-        else bucketed_input.where(F.col("bucket").isin(stale))
-    )
-    out = fn(todo)
-    assert "bucket" in out.columns, f"stage {stage}: fn must preserve 'bucket'"
-
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    out.write.mode("overwrite").partitionBy("bucket").parquet(data)
+    got: Stats = {}
+    if stale:
+        # A literal bucket filter prunes partitions of a checkpointed
+        # input; bucket is never null (pmod of a hash), so no row is
+        # lost.
+        todo = (
+            bucketed_input if prev is None
+            else bucketed_input.where(F.col("bucket").isin(stale))
+        )
+        out = fn(todo)
+        assert "bucket" in out.columns, f"stage {stage}: fn must preserve 'bucket'"
+        got = _write_observed(out, data, stale, sha_col)
     # Whole-RUN wall for this stage invocation, stamped identically
     # onto every bucket it wrote — honest name: this is NOT a
     # per-bucket task time (capturing that needs a Spark listener).
     run_wall_ms = int((time.perf_counter() - t0) * 1000)
 
     written = spark.read.parquet(data)
-    got = _bucket_stats(written.where(F.col("bucket").isin(stale)), sha_col)
     ts = time.time_ns()
     rows = [
-        (stage, b, cur[b][0], *got.get(b, (0, _ZERO)), cur[b][1], run_wall_ms, run_id, ts)
+        (stage, b, cur[b][0], *got[b], cur[b][1], run_wall_ms, run_id, ts)
         for b in stale
     ] + [(stage, b, 0, 0, _ZERO, _ZERO, run_wall_ms, run_id, ts) for b in orphaned]
     # From pandas, the rows reach the JVM as Arrow batches: no Python
@@ -241,7 +312,8 @@ def run_stage(
     spark.createDataFrame(
         pd.DataFrame(rows, columns=_MANIFEST_SCHEMA.names), _MANIFEST_SCHEMA
     ).coalesce(1).write.mode("append").parquet(_manifest_path(base, stage))
-    return written
+    out_stats.update((b, s) for b, s in got.items() if s[0])
+    return written, out_stats
 
 
 def lineage_check(
@@ -251,10 +323,9 @@ def lineage_check(
     """Per-row lineage invariant: XOR-fold of input content shas equals
     the manifest's fold, per bucket (stages that preserve one row per
     doc; identity for the ingest stage)."""
-    manifest = read_manifest(spark, base, stage)
-    if manifest is None:
+    prev = _manifest_rows(spark, base, stage)
+    if prev is None:
         return False
-    prev = {r["partition_id"]: r for r in manifest.collect()}
     cur = _bucket_stats(bucketed_input, sha_col)
     # A bucket present on only ONE side (input never manifested, or
     # manifest row with no input) is a lineage failure. Exception: a

@@ -132,15 +132,14 @@ def _build_parity(
     # The trie scan is the most expensive stage (full corpus + Python
     # workers); every downstream consumer reuses ONE materialization.
     # DISK_ONLY, not MEMORY_AND_DISK: MemoryStore block registration
-    # serializes under a shared lock at high task concurrency.
-    mentions = mentions.persist(StorageLevel.DISK_ONLY)
-    # AQE materializes independent query stages CONCURRENTLY; an
-    # unpopulated cache gets recomputed per racing subtree — the eager
-    # barrier populates it before the fan-out. localCheckpoint, not
-    # persist+count (round 6, guide §5): the per-relation fan-out runs
-    # one action per relation, each of which otherwise re-analyzes the
-    # detector lineage; the checkpoint compiles them against a
-    # LogicalRDD.
+    # serializes under a shared lock at high task concurrency. An eager
+    # localCheckpoint, not a persist: the same one detector run, but no
+    # CacheManager entry that outlives the returned frames (nothing
+    # would unpersist it), and AQE's concurrently materialized stages
+    # cannot race an unpopulated cache. The per-relation fan-out runs
+    # one action per relation, each compiled against a LogicalRDD
+    # instead of re-analyzing the detector lineage (round 6, guide §5).
+    mentions = mentions.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     mentions_dedup = (
         mentions.select("doc_id", "entity_id", "entity_type")
         .distinct()

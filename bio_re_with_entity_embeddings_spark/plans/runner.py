@@ -7,7 +7,10 @@ a manifest row per bucket (rows in/out, content-sha xor fold, wall,
 run id). A rerun — after a crash, a kill, or on a grown corpus —
 recomputes ONLY missing or changed buckets; completed buckets are never
 touched (idempotent per-bucket dynamic overwrite), and a stage with no
-stale bucket returns its checkpoint after one input fingerprint.
+stale bucket returns its checkpoint after reading its manifest. Only
+the ingest stage fingerprints its input by a scan: the mentions and
+triples stages take their input stats from the output stats of the
+stage before (plans/manifest.py::_run_stage).
 
 The bucket key is ``pmod(xxhash64(repo), n_buckets)`` — the explicit
 repo-hash partitioning of the north rule: all files of a repo land in
@@ -44,8 +47,9 @@ def run_checkpointed(
       triples   global (cannot be bucket-local: pairs join across the
                 whole doc axis) — checkpointed as ONE manifest bucket
                 whose input fingerprint is the count + content-sha
-                xor-fold of the whole mention table: a rerun with
-                unchanged mentions skips the tail entirely; a crash
+                xor-fold of the whole mention table (the mentions
+                stage's per-bucket stats folded into one bucket): a
+                rerun with unchanged mentions skips the tail; a crash
                 mid-tail (or any upstream bucket change) recomputes it
                 idempotently.
 
@@ -73,7 +77,7 @@ def run_checkpointed(
     """
     cfg = config or P.PipelineConfig()
 
-    docs = M.run_stage(
+    docs, docs_stats = M._run_stage(
         spark,
         base_dir,
         "ingest",
@@ -92,8 +96,9 @@ def run_checkpointed(
             df.select("doc_id", "bucket", "content_sha"), "doc_id", "inner"
         )
 
-    mentions = M.run_stage(
-        spark, base_dir, mentions_stage, docs, detect, run_id=run_id
+    mentions, mention_stats = M._run_stage(
+        spark, base_dir, mentions_stage, docs, detect, run_id=run_id,
+        input_stats=docs_stats,
     )
 
     # Triple emission consumes the materialized mention table — a
@@ -101,7 +106,8 @@ def run_checkpointed(
     # bucket boundaries by definition). It runs through the SAME
     # manifest machinery as the bucket-local stages, as one logical
     # bucket: the stage is skipped when its input fingerprint (mention
-    # count + content-sha xor-fold) matches the manifest, recomputed
+    # count + content-sha xor-fold, folded from the mentions stage's
+    # per-bucket stats) matches the manifest, recomputed
     # idempotently otherwise — so the all-upstream-buckets-complete
     # gate is enforced by construction (run_stage returned only after
     # completing them) and a crash mid-tail resumes exactly.
@@ -130,10 +136,10 @@ def run_checkpointed(
     triples_stage = f"triples_{M.stage_hash((triple_knobs, emb_fp, ent_fp))}"
 
     tail_input = mentions.withColumn("bucket", F.lit(0).cast("int"))
-    triples = M.run_stage(
+    triples, _ = M._run_stage(
         spark, base_dir, triples_stage, tail_input,
         lambda rows: _triples_tail(spark, rows, dict_entries, entities, embeddings, cfg),
-        run_id=run_id,
+        run_id=run_id, input_stats=M.one_bucket(mention_stats),
     )
 
     return {

@@ -88,20 +88,10 @@ def write_triples(
         # parquet fallback must match it. Under Spark's default STATIC
         # partitionOverwriteMode, mode('overwrite') truncates the WHOLE
         # table, deleting unrelated pred/bucket partitions on an
-        # idempotent rerun. Set/restore is sound here because
-        # .parquet() executes eagerly inside this scope.
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "dynamic")
-        try:
-            writer.parquet(target)
-        finally:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
-    else:
-        writer.parquet(target)
+        # idempotent rerun. A per-write option: the session conf is
+        # left as it was.
+        writer = writer.option("partitionOverwriteMode", "dynamic")
+    writer.parquet(target)
 
 
 def read_triples(

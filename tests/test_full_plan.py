@@ -134,6 +134,35 @@ def test_checkpointed_equals_lazy(lazy_out, ck_out):
     )
 
 
+def test_unchanged_rerun_runs_no_stage(spark, world, kg_inputs, ck_base, ck_out):
+    """An unchanged rerun of the composed product runs no stage: every
+    manifest keeps run id r1, and it costs only the raw-input
+    fingerprints (curation signals, KG ingest), one manifest read per
+    stage and the dimension fingerprints."""
+    from bio_re_with_entity_embeddings_spark.plans import manifest as M
+
+    t1 = _triples_set(ck_out["triples"])
+    corpus, bench = world
+    entries, emb, entities = kg_inputs
+    sc = spark.sparkContext
+    sc.setJobGroup("full_rerun", "unchanged rerun")
+    try:
+        out2 = PF.run_full_checkpointed(
+            spark, corpus, entries, emb, ck_base, benchmark=bench,
+            n_buckets=8, curation_config=_ccfg(), pipeline_config=_pcfg(),
+            run_id="r2", entities=entities, doc_key=F.col("repo"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("full_rerun"))
+    assert n_jobs <= 24, n_jobs
+    assert _triples_set(out2["triples"]) == t1
+    for sub, stages in (("curation", out2["cur__stages"]), ("kg", out2["_stages"])):
+        for stage in stages.values():
+            m = M.read_manifest(spark, f"{ck_base}/{sub}", stage).toPandas()
+            assert set(m["run_id"]) == {"r1"}, stage
+
+
 def test_kill_between_products_resumes(
     spark, world, kg_inputs, ck_base, ck_out, lazy_out
 ):

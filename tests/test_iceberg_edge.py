@@ -76,8 +76,8 @@ def test_overwrite_partitions_is_dynamic_not_truncate(spark, triples, tmp_path):
     plain mode('overwrite') would truncate the whole table)."""
     target = str(tmp_path / "graph5")
     key = "spark.sql.sources.partitionOverwriteMode"
-    # pin STATIC (other suites — manifest.run_stage — may have left the
-    # shared session dynamic, which would mask the truncation bug)
+    # pin STATIC (Spark's default): a dynamic session conf would mask
+    # the truncation bug
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "static")
     try:

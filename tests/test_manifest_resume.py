@@ -277,3 +277,113 @@ def test_shrunk_corpus_deletes_orphaned_buckets(spark, workdir):
     assert sorted(r.doc_id for r in out3.select("doc_id").collect()) == exp
     m3 = M.read_manifest(spark, workdir, "st").toPandas()
     assert "r3" not in set(m3["run_id"])
+
+
+def test_run_stage_leaves_session_conf(spark, workdir):
+    """run_stage's per-bucket overwrite is dynamic per write: the
+    session's partitionOverwriteMode is left as it was, and a resumed
+    run under the default STATIC mode still keeps the completed
+    buckets."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        docs = M.with_bucket(_corpus(spark), "repo", 8).cache()
+        M.run_stage(spark, workdir, "st", docs.where(F.col("bucket") < 4), lambda df: df, run_id="r1")
+        out = M.run_stage(spark, workdir, "st", docs, lambda df: df, run_id="r2")
+        assert out.count() == 200
+        assert spark.conf.get(key).lower() == "static"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _assert_fingerprints(spark, base, stage_inputs):
+    """Each stage's manifest holds what scans give: (rows_in,
+    in_sha_xor) those of the stage's actual input, (rows_out,
+    content_sha_xor) those of its data directory, bucket by bucket (a
+    scan sees no bucket without rows)."""
+    for stage, stage_input in stage_inputs.items():
+        m = M.read_manifest(spark, base, stage).collect()
+        ins = {r.partition_id: (r.rows_in, r.in_sha_xor) for r in m if r.rows_in}
+        outs = {r.partition_id: (r.rows_out, r.content_sha_xor) for r in m if r.rows_out}
+        assert ins == M._bucket_stats(stage_input, "content_sha"), stage
+        data = spark.read.parquet(os.path.join(base, stage, "data"))
+        assert outs == M._bucket_stats(data, "content_sha"), stage
+
+
+def test_kg_runner_fingerprints_equal_scans(spark, tmp_path):
+    """The KG runner derives the mentions and triples stages' input
+    stats from the upstream stage's output stats instead of scanning:
+    they must equal the scans after a cold run, a crash-resume and a
+    grown-corpus rerun, including a bucket whose mention output is
+    empty."""
+    from bio_re_with_entity_embeddings_spark.plans import runner
+
+    n = 64
+    dictionary = fixtures.make_dictionary()
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    rows = fixtures.make_corpus_rows(260, dictionary)
+    used = {
+        r.bucket for r in M.with_bucket(
+            spark.createDataFrame(rows, schemas.CORPUS), "repo", n
+        ).select("bucket").distinct().collect()
+    }
+    # a repo alone in a low bucket whose one file mentions nothing
+    lone = next(
+        r.repo for r in M.with_bucket(
+            spark.createDataFrame([(f"zz/quiet-{k}",) for k in range(256)], "repo string"),
+            "repo", n,
+        ).collect()
+        if r.bucket < n // 2 and r.bucket not in used
+    )
+    quiet = [(lone, "src/quiet.py", "c0", "python", "zzqx wvyk plmn")]
+    small = spark.createDataFrame(rows[:200] + quiet, schemas.CORPUS)
+    grown = spark.createDataFrame(rows + quiet, schemas.CORPUS)
+    base = str(tmp_path / "kgfp")
+
+    def run(corpus, rid):
+        out = runner.run_checkpointed(spark, corpus, dictionary, emb, base, n_buckets=n, run_id=rid)
+        st = out["_stages"]
+        _assert_fingerprints(spark, base, {
+            st["ingest"]: M.with_bucket(pipeline.ingest(corpus), "repo", n),
+            st["mentions"]: spark.read.parquet(f"{base}/{st['ingest']}/data"),
+            st["triples"]: spark.read.parquet(f"{base}/{st['mentions']}/data")
+            .withColumn("bucket", F.lit(0)),
+        })
+        return st
+
+    half = M.with_bucket(small, "repo", n).where(F.col("bucket") < n // 2).drop("bucket")
+    run(half, "r1")  # cold, and the crash: only half the buckets ran
+    run(small, "r2")  # resume
+    st = run(grown, "r3")  # grown corpus
+    men = M.read_manifest(spark, base, st["mentions"]).collect()
+    assert any(r.rows_in and not r.rows_out for r in men), "no empty-output bucket"
+
+
+def test_curation_runner_fingerprints_equal_scans(spark, tmp_path):
+    """The curation runner's keep and corpus stages take their input
+    stats from the signals and keep stages: they must equal the scans
+    after a cold run over half the buckets and its resume."""
+    from bio_re_with_entity_embeddings_spark.contract_text import (
+        _curate_split,
+        _docs_with_near_dups,
+    )
+    from bio_re_with_entity_embeddings_spark.plans import curation as PC
+
+    n = 8
+    docs, bench = _curate_split(_docs_with_near_dups(spark, "/root/testdata/sf0.001"))
+    cfg = PC.CurationConfig(hash_mode="md5", min_quality=0.55, decon_n=4, decon_hashed=False, quota=8)
+    base = str(tmp_path / "curfp")
+    half = (
+        M.with_bucket(docs.withColumn("doc", F.col("doc_id").cast("string")), "doc", n)
+        .where(F.col("bucket") < n // 2)
+        .drop("bucket", "doc")
+    )
+    for corpus, rid in ((half, "r1"), (docs, "r2")):
+        out = PC.run_curation_checkpointed(spark, corpus, bench, base, n_buckets=n, config=cfg, run_id=rid)
+        st = out["_stages"]
+        _assert_fingerprints(spark, base, {
+            st["signals"]: M.with_bucket(PC._doc_rows(corpus, "doc_id", "text", "lang"), "doc", n),
+            st["keep"]: spark.read.parquet(f"{base}/{st['signals']}/data").withColumn("bucket", F.lit(0)),
+            st["corpus"]: spark.read.parquet(f"{base}/{st['keep']}/data"),
+        })
